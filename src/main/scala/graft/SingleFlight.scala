@@ -2,19 +2,18 @@ package graft
 
 import java.util.concurrent.{ConcurrentHashMap, CountDownLatch}
 
-/** Single-flight get-or-build for the session-shared structural caches
-  * (VERDICT r17 item 3).
+/** Single-flight get-or-build behind [[SharedBuild]], the registry of
+  * session-shared builds (VERDICT r17 item 3).
   *
   * The r17 compute-then-`putIfAbsent` discipline is correct but lets
   * two concurrent sessions both pay a multi-minute build (e.g. the sf10
   * bucketed write) and purge the loser. This keeps that discipline's
   * two invariants — no `ConcurrentHashMap` mapping lock is ever held
   * across a Spark job, and build callbacks may freely re-enter the
-  * cache ladder's hygiene sweeps (`evictStopped`/`boundSessions`
-  * mutate the SAME result maps, which is undefined inside a
-  * `computeIfAbsent` callback) — while making late arrivals await the
-  * one in-flight builder on a per-key latch instead of duplicating the
-  * work.
+  * registry, whose hygiene sweeps (`evictStopped`/`boundSessions`)
+  * mutate the SAME result map (undefined inside a `computeIfAbsent`
+  * callback) — while making late arrivals await the one in-flight
+  * builder on a per-key latch instead of duplicating the work.
   *
   * Protocol per call: result-map hit returns immediately; otherwise
   * race for the key's latch. The winner re-checks the map (a previous
@@ -45,7 +44,7 @@ private[graft] final class SingleFlight[K] {
           if (again != null) return again
           // Shared-build attribution (VERDICT r19 item 3): every
           // session-shared structural build (bucketed writes, the dedup
-          // ladder) runs inside a SingleFlight build closure, so timing
+          // ladder) runs inside this build closure, so timing
           // here captures the whole first-payer cost; Bench reads the
           // clock's delta around each query to decompose the q44-style
           // first-payer rows into build + query components. The ladder
@@ -91,9 +90,9 @@ private[graft] final class SingleFlight[K] {
 }
 
 private[graft] object SingleFlight {
-  /** JVM-wide nanoseconds spent INSIDE shared-build closures (all
-    * SingleFlight instances). Monotone; consumers (Bench) read deltas
-    * around a timed region. Waiters who `await` a builder are NOT
+  /** JVM-wide nanoseconds spent INSIDE shared-build closures.
+    * Monotone; consumers (Bench) read deltas around a timed region.
+    * Waiters who `await` a builder are NOT
     * counted — only the one thread that pays the build adds time, so a
     * single-threaded bench's delta is exactly the build seconds its
     * query paid. */

@@ -138,7 +138,7 @@ object StreamSoak {
         .trigger(Trigger.ProcessingTime("1 second"))
         .start()
       val ps = drive(q)
-      graft.sources.Bucketing.purgeDir(java.nio.file.Paths.get(ckpt))
+      graft.SharedBuild.purgeDir(java.nio.file.Paths.get(ckpt))
       metrics(name, ps)
     }
 
@@ -172,7 +172,7 @@ object StreamSoak {
         }.getOrElse(0L)
         (vs.size, b)
       } finally versions.close()
-      graft.sources.Bucketing.purgeDir(p)
+      graft.SharedBuild.purgeDir(p)
       metrics("stream_upsert", ps,
         s""","snapshot_rows":$snapRows,"snapshot_bytes":$bytes,""" +
           s""""n_versions":$nVersions""")

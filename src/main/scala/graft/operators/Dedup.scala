@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.{Q, Tables}
+import graft.{Q, SharedBuild, Tables}
 import graft.functions.Parity.pround
 
 /** Deduplication operators for large-scale training-data pipelines
@@ -1014,120 +1014,8 @@ object DedupQueries {
     * keeps the stored blocks alive for the session. Content is
     * byte-identical to a fresh build, so which query populates the
     * cache first cannot change any result. */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private[graft] def sharedClusters(s: SparkSession, d: String): DataFrame = {
-    evictStale(s)
-    cached(clusterCache, (s, d))(dedupClusters(sharedCandidates(s, d)))
-  }
-
-  /** Get-or-build WITHOUT ConcurrentHashMap.computeIfAbsent (ADVICE
-    * r16): build callbacks re-enter the shared-cache ladder, whose
-    * hygiene sweeps (evictStopped/boundSessions) remove entries from
-    * the SAME map — in-flight modification of the map being computed
-    * into is undefined behavior per the CHM contract, and the mapping
-    * lock would also block every other session for the full build
-    * (possibly a multi-minute Spark job). Since r18 the compute runs
-    * under a per-(map,key) [[graft.SingleFlight]] latch (VERDICT r17
-    * item 3): concurrent callers for the same key await the one
-    * builder instead of both paying the build, still with no lock held
-    * across a Spark job. The flight registry is PER RESULT MAP: the
-    * ladder is a DAG (clusters → candidates → signatures → shingles),
-    * so a builder for one map re-entering `cached` for its input map
-    * lands in a different latch namespace — same-thread re-entry can
-    * never await its own latch. */
-  // IDENTITY-keyed registry, never a ConcurrentHashMap keyed by the
-  // cache maps: CHM equality is CONTENT-based, so two empty caches are
-  // EQUAL keys and would share one flight — a nested build
-  // (candidates → signatures) then awaits its own latch and deadlocks
-  // (caught by DedupCacheSpec hanging on first wiring). The registry
-  // lock covers only the lookup, never a build.
-  private val flights = new java.util.IdentityHashMap[
-    AnyRef, graft.SingleFlight[(SparkSession, String)]]
-  private def cached(
-      m: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame],
-      k: (SparkSession, String))(build: => DataFrame): DataFrame = {
-    val f = flights.synchronized {
-      var x = flights.get(m)
-      if (x == null) {
-        x = new graft.SingleFlight[(SparkSession, String)]
-        flights.put(m, x)
-      }
-      x
-    }
-    f.apply(m, k)(build)
-  }
-  /** Test hook (CacheLatchSpec): single-flight entry point with the
-    * production flight registry, usable on a spec-owned map. */
-  private[graft] def cachedForTest(
-      m: java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame],
-      k: (SparkSession, String))(build: => DataFrame): DataFrame =
-    cached(m, k)(build)
-
-  /** Eviction (ADVICE/VERDICT r12): entries key on the owning
-    * SparkSession, so a harness that cycles sessions (Bench runs each
-    * pass in a fresh one) would otherwise pin every stopped session and
-    * its checkpointed blocks for the JVM lifetime — and a stale hit
-    * would throw on a stopped context. Both accessors purge dead-session
-    * entries before touching the map; O(live sessions) per call. The
-    * `dead` predicate defaults to the real signal (the session's context
-    * is stopped) and is injectable ONLY so the spec can exercise the
-    * purge without killing the suite-shared context. */
-  private[graft] def evictStopped(
-      dead: SparkSession => Boolean = _.sparkContext.isStopped): Unit = {
-    Seq(clusterCache, candCache, shingleCache, sigCache, jacCache,
-        winnowCache, capCache)
-      .foreach { m =>
-        val it = m.keySet().iterator()
-        while (it.hasNext) if (dead(it.next()._1)) it.remove()
-      }
-    // bucketed-layout entries (which also own on-disk temp dirs, purged
-    // eagerly for DEAD sessions only) live in Bucketing's shared cache
-    graft.sources.Bucketing.evictStopped(dead)
-  }
-
-  /** `isStopped` only covers harnesses that cycle the whole context
-    * (Bench). Sessions cycled via `SparkSession.newSession()` share one
-    * LIVE context, so without a second bound a newSession-per-request
-    * pattern grows the caches (and their checkpointed blocks) without
-    * limit (ADVICE r13). When more than [[MaxCachedSessions]] distinct
-    * live sessions accumulate, everything not owned by the session
-    * making the current call is dropped — safe because every cached
-    * table is a pure function of the corpus, so the worst case for a
-    * genuinely-concurrent session is one recompute, never a wrong
-    * result. */
-  private[graft] val MaxCachedSessions = 4
-  private[graft] def boundSessions(current: SparkSession): Unit = {
-    Seq(clusterCache, candCache, shingleCache, sigCache, jacCache,
-        winnowCache, capCache)
-      .foreach { m =>
-        val distinct = new java.util.HashSet[SparkSession]
-        m.keySet().forEach(k => { distinct.add(k._1); () })
-        if (distinct.size > MaxCachedSessions) {
-          val it = m.keySet().iterator()
-          while (it.hasNext) if (it.next()._1 ne current) it.remove()
-        }
-      }
-    // bucketed layouts: entries drop, dirs stay until shutdown — a LIVE
-    // evicted session holding the DataFrame must keep reading its files
-    // (ADVICE r15); see Bucketing.boundSessions
-    graft.sources.Bucketing.boundSessions(current, MaxCachedSessions)
-  }
-
-  /** Per-accessor hygiene: purge stopped-context entries, then bound the
-    * distinct-session count for the shared-context cycling pattern. */
-  private def evictStale(current: SparkSession): Unit = {
-    evictStopped()
-    boundSessions(current)
-  }
-
-  /** Test hook: entry counts across ALL session-shared caches
-    * (clusters, candidates, shingles, signatures, jaccard pairs,
-    * winnow fingerprints). */
-  private[graft] def cacheSizes: Seq[Int] =
-    Seq(clusterCache, candCache, shingleCache, sigCache, jacCache,
-        winnowCache, capCache)
-      .map(_.size())
+  private[graft] def sharedClusters(s: SparkSession, d: String): DataFrame =
+    SharedBuild(s, d, "clusters")(dedupClusters(sharedCandidates(s, d)))
 
   /** Session-shared materialized LSH candidate-pair table — the same
     * persisted-table discipline one level lower: the signature build +
@@ -1137,14 +1025,10 @@ object DedupQueries {
     * to the corpus (bounded by Σ min(df,cap)²/2 over buckets), so
     * materializing it is cheap; content is independent of which query
     * builds it first. */
-  private val candCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private[graft] def sharedCandidates(s: SparkSession, d: String): DataFrame = {
-    evictStale(s)
-    cached(candCache, (s, d))(Materialize.frame(
+  private[graft] def sharedCandidates(s: SparkSession, d: String): DataFrame =
+    SharedBuild(s, d, "candidates")(Materialize.frame(
       candidatesFromSig(sharedSignatures(s, d),
         capTab = Some(sharedBucketCap(s, d)))))
-  }
 
   /** Session-shared materialized DISTINCT (doc_id, sh_h) shingle table —
     * the bottom of the shared-build ladder (shingles → signatures →
@@ -1156,13 +1040,9 @@ object DedupQueries {
     * computed at ingest and read by every dedup/similarity job. Content
     * is a pure function of the corpus, so populate order cannot change
     * any result. */
-  private val shingleCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private[graft] def sharedShingles(s: SparkSession, d: String): DataFrame = {
-    evictStale(s)
-    cached(shingleCache, (s, d))(Materialize.frame(
+  private[graft] def sharedShingles(s: SparkSession, d: String): DataFrame =
+    SharedBuild(s, d, "shingles")(Materialize.frame(
       shingleHashRows(docs(s, d)).distinct()))
-  }
 
   /** Session-shared materialized 4-band minhash signature table, built
     * from [[sharedShingles]] (min over the distinct shingle set equals
@@ -1171,13 +1051,9 @@ object DedupQueries {
     * bucket census g21, the band-agreement curve g24, the split
     * incremental g13 (signatures are per-doc, so a doc-subset's table
     * is a doc_id filter of this one), and the e4/e5 near-dup audits. */
-  private val sigCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private[graft] def sharedSignatures(s: SparkSession, d: String): DataFrame = {
-    evictStale(s)
-    cached(sigCache, (s, d))(Materialize.frame(
+  private[graft] def sharedSignatures(s: SparkSession, d: String): DataFrame =
+    SharedBuild(s, d, "signatures")(Materialize.frame(
       signatureFromShingles(sharedShingles(s, d), 4)))
-  }
 
   /** Session-shared materialized exact threshold-Jaccard pair table
     * (prefix-filtered All-Pairs join at t = 0.5 over [[sharedShingles]])
@@ -1185,17 +1061,13 @@ object DedupQueries {
     * g16 rolls it up by source, g14 grades the LSH candidates against
     * it; before this table existed each of the three re-ran the full
     * exact join. */
-  private val jacCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private[graft] def sharedJaccardPairs(s: SparkSession, d: String): DataFrame = {
-    evictStale(s)
+  private[graft] def sharedJaccardPairs(s: SparkSession, d: String): DataFrame =
     // r16: reads the BUCKETED shingle index — the prefix table's df
     // groupBy and df join-back inherit the sh_h bucket layout (zero
     // Exchange until the per-doc windows), amortizing the one write
     // across the y4/g14/g16 family
-    cached(jacCache, (s, d))(Materialize.frame(
+    SharedBuild(s, d, "jaccard")(Materialize.frame(
       SimilarityJoin.prefixJoin(sharedBucketedShingles(s, d), 0.5)))
-  }
 
   /** Session-shared materialized winnow-fingerprint table (t15's
     * (doc_id, fp_pos, fp) selection over the positional shingle
@@ -1204,13 +1076,9 @@ object DedupQueries {
     * and positions don't survive the distinct shingle set, so it is its
     * own build, not derivable from the shingle table. t15 returns it;
     * y9's candidate join reads it instead of re-winnowing the corpus. */
-  private val winnowCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
-  private[graft] def sharedWinnowFps(s: SparkSession, d: String): DataFrame = {
-    evictStale(s)
-    cached(winnowCache, (s, d))(Materialize.frame(
+  private[graft] def sharedWinnowFps(s: SparkSession, d: String): DataFrame =
+    SharedBuild(s, d, "winnow")(Materialize.frame(
       TextAnalysis.winnowFingerprints(docs(s, d))))
-  }
 
   /** Session-shared BUCKETED shingle index (VERDICT r14 item 6): the
     * distinct (doc_id, sh_h) table written ONCE per (session, dir) as a
@@ -1223,7 +1091,7 @@ object DedupQueries {
     * the ladder pays per session today: the shingle index re-shuffles
     * on sh_h once per join — bucketing at ingest pays that shuffle
     * exactly once, at write time. Temp dir tracked/purged via
-    * [[graft.sources.Bucketing]] hygiene.
+    * [[graft.SharedBuild]] hygiene.
     *
     * r16 (VERDICT r15 item 4): this is now the candidate FRONT of the
     * whole sh_h ladder, not a g29-only demonstration — g15's
@@ -1233,11 +1101,9 @@ object DedupQueries {
     * one join saves; with 3+ readers per session the layout wins
     * outright). g4 deliberately stays on the unbucketed shared table as
     * the measured contrast (the bucketed-vs-not family bench row). */
-  private[graft] def sharedBucketedShingles(s: SparkSession, d: String): DataFrame = {
-    evictStale(s)
+  private[graft] def sharedBucketedShingles(s: SparkSession, d: String): DataFrame =
     graft.sources.Bucketing.sharedBucketedTable(s, d, "shingles", "sh_h",
       () => sharedShingles(s, d))
-  }
 
   /** Session-shared BUCKETED winnow-fingerprint index: the DISTINCT
     * (doc_id, fp) projection of [[sharedWinnowFps]], bucketed+sorted by
@@ -1252,11 +1118,9 @@ object DedupQueries {
     * (the cheap estimator lane — the r16 budget-matched g28/g30
     * censuses adjudicated banded LSH the default candidate generator,
     * winnow recall 0.754/0.579 vs LSH 0.878/0.995 at sf10). */
-  private[graft] def sharedBucketedWinnowFps(s: SparkSession, d: String): DataFrame = {
-    evictStale(s)
+  private[graft] def sharedBucketedWinnowFps(s: SparkSession, d: String): DataFrame =
     graft.sources.Bucketing.sharedBucketedTable(s, d, "winnowfp", "fp",
       () => sharedWinnowFps(s, d).select(col("doc_id"), col("fp")).distinct())
-  }
 
   /** Session-shared 1-row derived-cap tables (VERDICT r16 item 1): the
     * [[Dedup.autoCapped]] derivation — df histogram + n_docs + budget
@@ -1270,40 +1134,31 @@ object DedupQueries {
     * `capTab` — their plans broadcast-crossJoin the stored row instead
     * of re-aggregating the index. ONLY full-corpus consumers read these:
     * g13 (doc-subset index side) and g25/g30 (augmented corpora) keep
-    * the in-plan derivation because their input density differs. Keyed
-    * `dir#kind` so the (session, dir)-shaped hygiene sweeps apply. */
-  private val capCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]
+    * the in-plan derivation because their input density differs. */
 
   /** Derived df cap for the shingle index (g4/g15/g29's `sh_h` key).
     * Built from [[sharedShingles]] — the bucketed projection has
     * identical content, so one cap serves both layouts. */
-  private[graft] def sharedShingleCap(s: SparkSession, d: String): DataFrame = {
-    evictStale(s)
-    cached(capCache, (s, d + "#sh_h"))(Materialize.frame(
+  private[graft] def sharedShingleCap(s: SparkSession, d: String): DataFrame =
+    SharedBuild(s, d, "cap:sh_h")(Materialize.frame(
       Dedup.derivedCap(sharedShingles(s, d), Seq("sh_h"),
         Dedup.DefaultShingleDfCap)))
-  }
 
   /** Derived df cap for the LSH bucket index ((band, minh) — the
     * candidate build, g24's agreement curve, e4/e5's near-dup rule). */
-  private[graft] def sharedBucketCap(s: SparkSession, d: String): DataFrame = {
-    evictStale(s)
-    cached(capCache, (s, d + "#bucket"))(Materialize.frame(
+  private[graft] def sharedBucketCap(s: SparkSession, d: String): DataFrame =
+    SharedBuild(s, d, "cap:bucket")(Materialize.frame(
       Dedup.derivedCap(sharedSignatures(s, d), Seq("band", "minh"),
         Dedup.DefaultBucketDfCap)))
-  }
 
   /** Derived df cap for the winnow fingerprint index (`fp` —
     * y9/g27/g28), over the distinct (doc_id, fp) projection the
     * bucketed layout stores. */
-  private[graft] def sharedWinnowCap(s: SparkSession, d: String): DataFrame = {
-    evictStale(s)
-    cached(capCache, (s, d + "#fp"))(Materialize.frame(
+  private[graft] def sharedWinnowCap(s: SparkSession, d: String): DataFrame =
+    SharedBuild(s, d, "cap:fp")(Materialize.frame(
       Dedup.derivedCap(
         sharedWinnowFps(s, d).select(col("doc_id"), col("fp")).distinct(),
         Seq("fp"), Dedup.DefaultShingleDfCap)))
-  }
 
   private val toksSql = "list_filter(string_split_regex(text, '[ \t\n\r\f]+'), x -> x <> '')"
 

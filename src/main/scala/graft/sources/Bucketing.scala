@@ -55,188 +55,41 @@ object Bucketing {
     * (~128-512 MB), thousands of buckets at 100 TB. */
   val OrderBuckets = 32
 
-  /** Temp-dir hygiene (ADVICE r14): every bucketed build writes its
-    * parquet under a TRACKED temp dir — a JVM shutdown hook removes
-    * whatever is still registered at exit, and [[evictStopped]] purges
-    * a dir as soon as its owning session dies, so per-pass Bench
-    * sessions stop accumulating full table projections in /tmp (at
-    * sf10 that compounds the already-tight shuffle-disk budget). */
-  private val tempDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]
-  private lazy val hookInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      tempDirs.forEach(p => deleteTree(p))
-    }))
-  private[graft] def trackedTempDir(): java.nio.file.Path = {
-    hookInstalled
-    val p = java.nio.file.Files.createTempDirectory("graft_buckets_")
-    tempDirs.add(p)
-    p
-  }
-  /** Test hook: the temp dirs currently tracked for cleanup. */
-  private[graft] def trackedDirs: Seq[java.nio.file.Path] = {
-    import scala.jdk.CollectionConverters._
-    tempDirs.asScala.toSeq
-  }
-
-  /** Best-effort recursive delete + untrack (exit paths must not throw). */
-  private[graft] def purgeDir(p: java.nio.file.Path): Unit = {
-    deleteTree(p)
-    tempDirs.remove(p)
-    ()
-  }
-  /** Best-effort tree delete. Catches NonFatal, not just IOException
-    * (ADVICE r15: iterating a Files.walk stream surfaces disk errors as
-    * UncheckedIOException, a RuntimeException — an exit path or live
-    * query path must not throw on cleanup), and closes the walk stream
-    * (it holds directory fds). */
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    try {
-      import scala.jdk.CollectionConverters._
-      import scala.util.control.NonFatal
-      if (java.nio.file.Files.exists(p)) {
-        val walk = java.nio.file.Files.walk(p)
-        try walk.iterator().asScala.toSeq.reverse
-          .foreach(f => try { java.nio.file.Files.deleteIfExists(f); () }
-            catch { case NonFatal(_) => () })
-        finally walk.close()
-      }
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Purge entries (and their temp dirs) owned by STOPPED sessions —
-    * the DedupQueries.evictStopped discipline applied to the bucketed
-    * layouts. Eager dir deletion is safe here and only here: a stopped
-    * context can run no query, so no live DataFrame can still read the
-    * files. The `dead` predicate is injectable only for the spec. */
-  private[graft] def evictStopped(
-      dead: SparkSession => Boolean = _.sparkContext.isStopped): Unit = {
-    val it = bucketedTables.entrySet().iterator()
-    while (it.hasNext) {
-      val e = it.next()
-      if (dead(e.getKey._1)) { purgeDir(e.getValue._3); it.remove() }
-    }
-    val st = sharedTables.entrySet().iterator()
-    while (st.hasNext) {
-      val e = st.next()
-      if (dead(e.getKey._1)) { purgeDir(e.getValue._2); st.remove() }
-    }
-    // dirs whose map entry was dropped while the owner still lived
-    // (boundSessions): purge as soon as the owner dies — without this
-    // sweep they survive to the JVM shutdown hook (ADVICE r16, a
-    // partial regression of the r14 /tmp fix under the sf10 disk budget)
-    val pd = pendingDirs.entrySet().iterator()
-    while (pd.hasNext) {
-      val e = pd.next()
-      if (dead(e.getKey)) { e.getValue.forEach(p => purgeDir(p)); pd.remove() }
-    }
-  }
-
-  /** Bucketed dirs evicted from [[sharedTables]] while their owning
-    * session was still LIVE (the boundSessions path must not delete
-    * them — a live session's DataFrame may still read the files), held
-    * here keyed by owner so [[evictStopped]] can purge them the moment
-    * the owner dies instead of leaking them until JVM exit. */
-  private val pendingDirs =
-    new java.util.concurrent.ConcurrentHashMap[
-      SparkSession, java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]]
-
-  /** Bound the distinct-session count for the shared-context
-    * newSession() cycling pattern (the DedupQueries.boundSessions
-    * discipline). LIVE sessions' entries are dropped from the MAP ONLY —
-    * their backing dirs stay on disk until the shutdown hook (ADVICE
-    * r15: eager deletion under a still-live session turned the
-    * documented "one recompute, never a wrong result" contract into a
-    * mid-query FileNotFoundException; a dropped entry just recomputes —
-    * and rebuilds into a fresh dir — on next access). */
-  private[graft] def boundSessions(current: SparkSession,
-      maxSessions: Int): Unit = {
-    val distinct = new java.util.HashSet[SparkSession]
-    sharedTables.keySet().forEach(k => { distinct.add(k._1); () })
-    if (distinct.size > maxSessions) {
-      val it = sharedTables.entrySet().iterator()
-      while (it.hasNext) {
-        val e = it.next()
-        if (e.getKey._1 ne current) {
-          // park the dir with its owner so evictStopped can purge it at
-          // the owner's death (ADVICE r16) — never delete it now: the
-          // live owner may still hold a DataFrame over these files
-          pendingDirs
-            .computeIfAbsent(e.getKey._1,
-              _ => new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path])
-            .add(e.getValue._2)
-          it.remove()
-        }
-      }
-    }
-  }
-
   /** Generic session-shared bucketed layout: ONE bucketed+sorted
     * parquet table per (session, dir, kind), written on first access
     * and read by every later consumer in the session — the q50
     * write-time-shuffle lever as reusable machinery. At warehouse scale
     * these are ingest-time physical tables; here the first consumer
-    * query pays the write (the DedupQueries.shared* accounting) and the
-    * key column is never shuffled again below any consumer's first
-    * aggregation. `kind` must be lowercase-alpha (the fingerprint
-    * normalizer strips only `graft_b_[a-z]+_<hex>` suffixes). */
-  private val sharedTables =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String, String), (String, java.nio.file.Path)]
+    * query pays the write and the key column is never shuffled again
+    * below any consumer's first aggregation. The table is EXTERNAL over
+    * the entry's tracked temp dir, so [[graft.SharedBuild]] eviction
+    * reclaims the files. `kind` must be lowercase-alpha (the
+    * fingerprint normalizer strips only `graft_b_[a-z]+_<hex>`
+    * suffixes). */
   private[graft] def sharedBucketedTable(s: SparkSession, d: String,
       kind: String, key: String, build: () => DataFrame): DataFrame = {
-    evictStopped()
-    // NOT computeIfAbsent (ADVICE r16): build() re-enters the
-    // DedupQueries shared-cache ladder, whose hygiene sweeps call back
-    // into evictStopped/boundSessions and remove entries from THIS map —
-    // in-flight modification inside a computeIfAbsent callback is
-    // undefined behavior per the ConcurrentHashMap contract, and the
-    // mapping lock would stall every other session for the full bucketed
-    // write. Compute outside the map, publish with putIfAbsent; a lost
-    // race purges the duplicate build's dir and reads the winner.
-    // r18: the compute additionally runs under a per-key SingleFlight
-    // latch (VERDICT r17 item 3) — two concurrent sessions used to both
-    // pay the multi-minute sf10 bucketed write and purge the loser's
-    // dir; now late arrivals await the winner, still with no CHM
-    // mapping lock held across the write.
-    val k = (s, d, kind)
-    val (name, _) = sharedFlight(sharedTables, k) {
+    val name = graft.SharedBuild.withTempDir(s, d, s"bucketed:$kind") { base =>
       val name = s"graft_b_${kind}_${java.util.UUID.randomUUID().toString.take(8)}"
-      val base = trackedTempDir()
       writeBucketed(build(), name, key, OrderBuckets,
         sortCols = Seq(key), path = Some(s"$base/$kind"))
-      (name, base)
+      name
     }
     s.table(name)
   }
-  private val sharedFlight =
-    new graft.SingleFlight[(SparkSession, String, String)]
-
-  /** Test hook: entry count of the generic shared-table cache. */
-  private[graft] def sharedTableCount: Int = sharedTables.size()
 
   /** Session-shared bucketed (orders, lineitem) layout, both bucketed +
     * sorted by the order key: built ONCE per (session, dir) — the
     * write-time shuffle is the LAST time this join key is ever
     * shuffled; every subsequent orderkey join or aggregate in the
     * session is exchange-free. The first consumer query in a session
-    * pays the build (the DedupQueries.shared* accounting); at warehouse
-    * scale these are the ingest-time physical tables, not a query-time
-    * step. Registered as EXTERNAL tables over a per-build temp dir so
-    * no `spark-warehouse` litter lands in the working directory. */
-  private val bucketedTables =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), (String, String, java.nio.file.Path)]
+    * pays the build; at warehouse scale these are the ingest-time
+    * physical tables, not a query-time step. Registered as EXTERNAL
+    * tables over the entry's tracked temp dir so no `spark-warehouse`
+    * litter lands in the working directory. */
   private[graft] def sharedBucketedOrderTables(
-      s: SparkSession, d: String): (String, String) = {
-    evictStopped()
-    // r18: SingleFlight instead of computeIfAbsent — the old mapping
-    // lock was held across BOTH bucketed writes (Spark jobs), stalling
-    // every evictStopped/boundSessions sweep over this map for their
-    // duration; the latch protocol keeps one-build semantics without
-    // any lock spanning a job (VERDICT r17 item 3).
-    val (to, tl, _) = orderFlight(bucketedTables, (s, d)) {
+      s: SparkSession, d: String): (String, String) =
+    graft.SharedBuild.withTempDir(s, d, "orders+lineitem") { base =>
       val suffix = java.util.UUID.randomUUID().toString.take(8)
-      val base = trackedTempDir()
       val (to, tl) = (s"graft_b_orders_$suffix", s"graft_b_lineitem_$suffix")
       writeBucketed(
         Tables.orders(s, d).select("o_orderkey", "o_orderpriority"),
@@ -247,11 +100,8 @@ object Bucketing {
           .select("l_orderkey", "l_extendedprice", "l_discount"),
         tl, "l_orderkey", OrderBuckets, sortCols = Seq("l_orderkey"),
         path = Some(s"$base/lineitem"))
-      (to, tl, base)
+      (to, tl)
     }
-    (to, tl)
-  }
-  private val orderFlight = new graft.SingleFlight[(SparkSession, String)]
 
   /** The zero-shuffle fact-fact join over the shared bucketed layout:
     * orders ⋈ lineitem on the order key as a SortMergeJoin whose

@@ -61,12 +61,12 @@ class BucketingSpec extends SparkSpec {
     Bucketing.sharedBucketedOrderTables(spark, sf("sf0.001"))
     graft.operators.DedupQueries
       .sharedBucketedShingles(spark, sf("sf0.001")).count()
-    val before = Bucketing.trackedDirs
+    val before = SharedBuild.trackedDirs
     assert(before.nonEmpty)
     before.foreach(p => assert(java.nio.file.Files.exists(p), p.toString))
     // treat every session as dead: entries AND their on-disk dirs go
-    graft.operators.DedupQueries.evictStopped(_ => true)
-    assert(Bucketing.trackedDirs.isEmpty)
+    SharedBuild.evictStopped(_ => true)
+    assert(SharedBuild.trackedDirs.isEmpty)
     before.foreach(p => assert(!java.nio.file.Files.exists(p), p.toString))
     // rebuild-on-demand: the accessor recreates a purged layout
     val (to, _) = Bucketing.sharedBucketedOrderTables(spark, sf("sf0.001"))
@@ -81,11 +81,11 @@ class BucketingSpec extends SparkSpec {
     val df1 = graft.operators.DedupQueries
       .sharedBucketedShingles(spark, sf("sf0.001"))
     val n1 = df1.count()
-    val dirs = Bucketing.trackedDirs
+    val dirs = SharedBuild.trackedDirs
     assert(dirs.nonEmpty)
     val other = spark.newSession()
     // maxSessions=0 forces the bound: every non-`other` entry drops
-    Bucketing.boundSessions(other, 0)
+    SharedBuild.boundSessions(other, 0)
     // the files must survive the eviction...
     dirs.foreach(p => assert(java.nio.file.Files.exists(p), p.toString))
     // ...so the evicted session's already-returned frame still reads
@@ -102,19 +102,37 @@ class BucketingSpec extends SparkSpec {
     // this, cycling >MaxCachedSessions live sessions accumulates full
     // table projections in /tmp for the JVM lifetime (the sf10
     // shuffle-disk budget cannot absorb that)
-    val preexisting = Bucketing.trackedDirs.toSet
+    val preexisting = SharedBuild.trackedDirs.toSet
     val owner = spark.newSession()
     graft.operators.DedupQueries
       .sharedBucketedShingles(owner, sf("sf0.001")).count()
-    val ownerDirs = Bucketing.trackedDirs.toSet -- preexisting
+    val ownerDirs = SharedBuild.trackedDirs.toSet -- preexisting
     assert(ownerDirs.nonEmpty)
     val other = spark.newSession()
-    Bucketing.boundSessions(other, 0) // owner's entry dropped, dir parked
+    SharedBuild.boundSessions(other, 0) // owner's entry dropped, dir parked
     ownerDirs.foreach(p => assert(java.nio.file.Files.exists(p), p.toString))
     // owner "dies": the parked dir is purged by the very next sweep
-    Bucketing.evictStopped(s => s eq owner)
-    val after = Bucketing.trackedDirs.toSet
+    SharedBuild.evictStopped(s => s eq owner)
+    val after = SharedBuild.trackedDirs.toSet
     assert(ownerDirs.intersect(after).isEmpty,
       s"parked dirs must be reclaimed at owner death: $ownerDirs vs $after")
+  }
+
+  test("bucketed orders/lineitem layouts stay inside the live-session bound") {
+    // sessions cycled with newSession() share a LIVE context, so only
+    // the session bound can drop their entries; each entry pins a full
+    // orders+lineitem projection on disk
+    val preexisting = SharedBuild.trackedDirs.toSet
+    val cycled = (1 to 2 * SharedBuild.MaxCachedSessions + 1).map { _ =>
+      val s = spark.newSession()
+      Bucketing.sharedBucketedOrderTables(s, sf("sf0.001"))
+      assert(SharedBuild.levelCounts("orders+lineitem") <=
+        SharedBuild.MaxCachedSessions + 1, SharedBuild.levelCounts.toString)
+      s
+    }
+    // once those sessions die, none of their layouts' dirs survive
+    SharedBuild.evictStopped(s => cycled.exists(_ eq s))
+    val leaked = SharedBuild.trackedDirs.toSet -- preexisting
+    assert(leaked.isEmpty, s"dirs of dead sessions survived: $leaked")
   }
 }

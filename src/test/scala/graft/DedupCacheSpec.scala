@@ -2,10 +2,10 @@ package graft
 
 import graft.operators.DedupQueries
 
-/** The session-shared build caches (clusters, candidates, shingles,
-  * signatures, jaccard pairs) must not grow across cycled sessions
-  * (VERDICT/ADVICE r12): every accessor purges entries whose owning
-  * session is dead before touching the map. A real `spark.stop()` would
+/** The session-shared builds in [[SharedBuild]] (clusters, candidates,
+  * shingles, signatures, jaccard pairs, caps) must not grow across
+  * cycled sessions (VERDICT/ADVICE r12): every get-or-build purges
+  * entries whose owning session is dead before touching the registry. A real `spark.stop()` would
   * kill the suite-shared context (SparkSpec contract), so the purge is
   * exercised through the injectable `dead` predicate; the default
   * predicate (`sparkContext.isStopped`) is asserted live on the shared
@@ -13,17 +13,20 @@ import graft.operators.DedupQueries
   */
 class DedupCacheSpec extends SparkSpec {
 
-  private def total: Int = DedupQueries.cacheSizes.sum
+  private def total: Int = SharedBuild.levelCounts.values.sum
 
   test("cycled sessions do not accumulate cache entries; live sessions are kept") {
     val dir = sf("sf0.001")
+    // start from an empty registry: other suites' sessions must not
+    // trip the live-session bound in the middle of the counts below
+    SharedBuild.evictStopped(_ => true)
     val before = total
     val s1 = spark.newSession()
     DedupQueries.sharedCandidates(s1, dir).count()
     val perSession = total - before
     // the layered build populates the whole ladder below candidates
     // (shingles, signatures, candidates at minimum)
-    assert(perSession >= 3, DedupQueries.cacheSizes.toString)
+    assert(perSession >= 3, SharedBuild.levelCounts.toString)
 
     // a second session gets its own entries (keyed by (session, dir))
     val s2 = spark.newSession()
@@ -31,7 +34,7 @@ class DedupCacheSpec extends SparkSpec {
     assert(total == before + 2 * perSession)
 
     // s1 "ends": the next purge drops exactly its entries, keeps s2's
-    DedupQueries.evictStopped(s => s eq s1)
+    SharedBuild.evictStopped(s => s eq s1)
     assert(total == before + perSession)
 
     // N sequential create-use-end cycles leave the count flat — the
@@ -39,7 +42,7 @@ class DedupCacheSpec extends SparkSpec {
     (1 to 3).foreach { _ =>
       val sn = spark.newSession()
       DedupQueries.sharedCandidates(sn, dir)
-      DedupQueries.evictStopped(s => s eq sn)
+      SharedBuild.evictStopped(s => s eq sn)
       assert(total == before + perSession)
     }
 
@@ -52,22 +55,22 @@ class DedupCacheSpec extends SparkSpec {
 
   test("newSession-per-request on one LIVE context stays bounded (ADVICE r13)") {
     val dir = sf("sf0.001")
-    // start from empty maps so entries == sessions below (other suites
-    // may have left multi-dir entries; they rebuild on demand)
-    DedupQueries.evictStopped(_ => true)
+    // start from an empty registry so entries == sessions below (other
+    // suites may have left multi-dir entries; they rebuild on demand)
+    SharedBuild.evictStopped(_ => true)
     assert(total == 0)
     // sessions cycled via newSession() share a live context, so
     // isStopped never fires for them; the distinct-session bound must
     // cap growth on its own. Run past the cap's worth of
     // request-sessions without ever stopping anything.
-    (1 to 2 * DedupQueries.MaxCachedSessions + 1).foreach { _ =>
+    (1 to 2 * SharedBuild.MaxCachedSessions + 1).foreach { _ =>
       DedupQueries.sharedCandidates(spark.newSession(), dir).count()
-      // cacheSizes is per-map; each map holds at most cap+1 sessions'
-      // entries (the bound evicts when the count EXCEEDS the cap), and
-      // for single-dir traffic entries == sessions
-      DedupQueries.cacheSizes.foreach { n =>
-        assert(n <= DedupQueries.MaxCachedSessions + 1,
-          DedupQueries.cacheSizes.toString)
+      // each level holds at most cap+1 sessions' entries (the bound
+      // evicts when the count EXCEEDS the cap), and for single-dir
+      // traffic entries == sessions
+      SharedBuild.levelCounts.values.foreach { n =>
+        assert(n <= SharedBuild.MaxCachedSessions + 1,
+          SharedBuild.levelCounts.toString)
       }
     }
   }

@@ -110,6 +110,17 @@ class NativeExprSpec extends SparkSpec {
     assert(uni.getLong(3) === 0L)      // neither is [A-Za-z]+
   }
 
+  test("gopher_stats: a token ending in U+2028 is not alpha (the DuckDB/RE2 answer)") {
+    // java.util.regex lets `$` match before a trailing line terminator,
+    // so the replaced rlike form would count this token as alpha; the
+    // byte pass follows the oracle's RE2 semantics instead
+    val gs = Seq("abc\u2028").toDF("text")
+      .select(expr("gopher_stats(text)")).collect()(0).getStruct(0)
+    assert(gs.getLong(0) === 1L) // one token: U+2028 is not a delimiter
+    assert(gs.getLong(1) === 4L)
+    assert(gs.getLong(3) === 0L)
+  }
+
   test("gopher_stats null text yields null") {
     val r = Seq(Option.empty[String]).toDF("text")
       .select(expr("gopher_stats(text)")).collect()(0)
