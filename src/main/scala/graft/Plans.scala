@@ -17,10 +17,11 @@ object Plans {
 
   private val picks: Seq[(String, String)] = Seq(
     "w1_wordcount" ->
-      ("The reference's one distributed query. Scan → partial " +
-        "HashAggregate (map-side combine, W4) → Exchange " +
-        "hashpartitioning(word) (W5) → final HashAggregate (W7), all " +
-        "inside WholeStageCodegen."),
+      ("The reference's one distributed query. Scan pruned to `text` → " +
+        "MapPartitions: one byte-level pass per partition tokenizes and " +
+        "combines (W3-W4, TokenCounts' bounded map; no Generate, no " +
+        "per-token row) → partial sum(cnt) over its (word, cnt) rows → " +
+        "Exchange hashpartitioning(word) (W5) → final HashAggregate (W7)."),
     "q1_pricing_summary" ->
       ("TPC-H Q1 shape: pushed scan filter + pruned columns " +
         "(PushedFilters/ReadSchema on the parquet scan), decimal-exact " +

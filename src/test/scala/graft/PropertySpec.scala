@@ -192,17 +192,34 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("wordCount conserves tokens for arbitrary ascii text") {
+  test("wordCount conserves tokens and matches explode(split) per word on arbitrary unicode text") {
     import spark.implicits._
-    val textGen = Gen.listOf(Gen.oneOf(
-      Gen.alphaNumStr.map(_.take(8)), Gen.const(" "), Gen.const("\t")))
-      .map(_.mkString)
-    forAllSamples(Gen.nonEmptyListOf(textGen), n = 8) { texts =>
-      val df = texts.toDF("text")
-      val totals = operators.WordCount.tokenTotals(df)
-        .collect()(0)
-      val expected = texts.flatMap(_.split("[ \t\n\r\f]+")).count(_.nonEmpty)
-      assert((if (totals.isNullAt(0)) 0L else totals.getLong(0)) === expected.toLong)
+    import org.apache.spark.sql.functions.{explode, length, split}
+    import operators.WordCount
+    // the five delimiters, and whitespace that must NOT split: \x0B,
+    // NBSP, NEL, LINE SEPARATOR
+    val sep = Gen.oneOf(" ", "\t", "\n", "\r", "\f", "\u000B", "\u00A0",
+      "\u0085", "\u2028", "  \t ")
+    val word = Gen.oneOf(Gen.alphaNumStr.map(_.take(6)),
+      Gen.oneOf("é", "中", "😀", "aé中😀", "naïve", "x"))
+    val line = Gen.listOf(Gen.oneOf(word, sep)).map(_.mkString)
+    val text = Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some("")),
+      8 -> line.map(Some(_)))
+    // one line of invalid UTF-8: a lone lead byte before a space, a stray
+    // 0xFF, a truncated 3-byte sequence, a bare continuation byte
+    val invalid = spark.sql(
+      "SELECT cast(X'2061C3206280FF09E4B8AD0CE4B82063800B64' AS string) AS text")
+    forAllSamples(Gen.nonEmptyListOf(text), n = 8) { texts =>
+      val df = texts.toDF("text").union(invalid)
+      val got = WordCount.wordCount(df).as[(String, Long)].collect().toMap
+      val want = df.select(explode(split(col("text"), WordCount.WhitespaceRe)).as("word"))
+        .where(length(col("word")) > 0)
+        .groupBy("word").count()
+        .as[(String, Long)].collect().toMap
+      assert(got === want)
+      val tokens = (texts.flatten :+ invalid.as[String].head())
+        .flatMap(_.split(WordCount.WhitespaceRe)).count(_.nonEmpty)
+      assert(got.values.sum === tokens.toLong)
     }
   }
 
