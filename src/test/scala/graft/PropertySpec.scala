@@ -192,6 +192,20 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("wordCount conserves tokens for arbitrary ascii text") {
+    import spark.implicits._
+    val textGen = Gen.listOf(Gen.oneOf(
+      Gen.alphaNumStr.map(_.take(8)), Gen.const(" "), Gen.const("\t")))
+      .map(_.mkString)
+    forAllSamples(Gen.nonEmptyListOf(textGen), n = 8) { texts =>
+      val df = texts.toDF("text")
+      val totals = operators.WordCount.tokenTotals(df)
+        .collect()(0)
+      val expected = texts.flatMap(_.split("[ \t\n\r\f]+")).count(_.nonEmpty)
+      assert((if (totals.isNullAt(0)) 0L else totals.getLong(0)) === expected.toLong)
+    }
+  }
+
   test("wordCount conserves tokens and matches explode(split) per word on arbitrary unicode text") {
     import spark.implicits._
     import org.apache.spark.sql.functions.{explode, length, split}
