@@ -178,8 +178,10 @@ object Plans {
         "in centroid buckets), intersected by two doc_id-keyed joins — " +
         "no cross-modal payload shuffle."),
     "t13_langid_confusion" ->
-      ("Classifier confusion census: map-side-combinable cell counts, " +
-        "the per-class share window runs over |classes|^2 rows however " +
+      ("Classifier confusion census: the per-doc token stats are one " +
+        "gopher_stats projection in the scan stage (no Generate, no " +
+        "doc_id exchange), the cell counts combine map-side, and the " +
+        "per-class share window runs over |classes|^2 rows however " +
         "big the corpus is."),
     "t15_winnow" ->
       ("Winnowing fingerprints: the whole selection is two Window " +
@@ -297,9 +299,9 @@ object Plans {
         "never shuffles; exact re-rank touches only probed cells."),
     "t19_gopher_rules" ->
       ("Gopher rule census: every per-doc predicate evaluates in the " +
-        "scan stage (no explode — array aggregates over the tokens " +
-        "column), so the only exchange carries |sources| rows of " +
-        "partial counts."),
+        "scan stage over one native gopher_stats byte pass (no explode, " +
+        "no token array), so the only exchange carries |sources| rows " +
+        "of partial counts."),
     "x22_group_moments" ->
       ("Moment profile: one partial-aggregated pass carrying four " +
         "DECIMAL power sums per group; skewness is arithmetic over the " +
@@ -482,7 +484,8 @@ object Plans {
         "constant-size regardless of corpus scale."),
     "e5_yield_funnel" ->
       ("Curation funnel composition: the three stage rules (g1 exact " +
-        "canonical, g2c full-band near-dup, t19 quality flags) land in " +
+        "canonical, g2c full-band near-dup read from the session-shared " +
+        "candidate level, t19 quality flags) land in " +
         "ONE doc_id-keyed left-join tree over per-doc frames, the " +
         "funnel is a single combinable aggregate, and the 4-row stack " +
         "unpivot is zero-shuffle — no stage re-scans the corpus."),
@@ -619,9 +622,10 @@ object Plans {
         "survivor branch re-derives per consumer by design (persist " +
         "via materialize at warehouse scale — documented trade)."),
     "e4_dedup_quality" ->
-      ("Dedup-quality joint census: g1 survivors × t2 quality flags " +
-        "meet on doc_id (the key both sides already reduced on); " +
-        "output is a flag-combination grid."),
+      ("Dedup-quality audit: the full-band near-dup drops (a filter " +
+        "over the session-shared candidate level — no bucket join of " +
+        "its own) left-join t2's per-row quality on doc_id; output is " +
+        "the 2-row kept/dropped rollup."),
     "y8_dup_ngram_rate" ->
       ("Duplicate-ngram rate via the shingle-df join — a doc's dup " +
         "mass comes from joining its shingles to the df table, never " +
@@ -691,7 +695,8 @@ object Plans {
         "frequency vs occurrence mass), no join, top-k."),
     "e5_yield_funnel" ->
       ("Curation yield funnel: per-doc stage flags join by doc_id from " +
-        "the g1/g2c/t19 kernels, ONE combinable aggregate, and a " +
+        "the g1/g2c/t19 kernels (g2c as a filter over the shared " +
+        "candidate level), ONE combinable aggregate, and a " +
         "zero-shuffle stack unpivot to the 4 funnel rows."),
   )
 

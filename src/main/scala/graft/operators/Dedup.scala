@@ -316,10 +316,11 @@ object Dedup {
                         bucketCap: Option[Int] = None): DataFrame =
     candidatesFromSig(minhashSignature(docs, bands), bucketCap)
 
-  /** The capped bucket self-join over an existing signature table —
-    * [[DedupQueries.sharedCandidates]] feeds this from the materialized
-    * shared signature table so the corpus is shingled and min-hashed
-    * once per session, not once per candidate consumer. */
+  /** The capped bucket self-join over an existing signature table. The
+    * session-shared candidate level ([[DedupQueries.sharedBandPairs]])
+    * is the [[nearDupsFromSig]] form instead, so it keeps each pair's
+    * band count; this form serves [[minhashCandidates]] and g25's
+    * augmented signature table. */
   private[graft] def candidatesFromSig(rawSig: DataFrame,
       bucketCap: Option[Int] = None,
       capTab: Option[DataFrame] = None): DataFrame = {
@@ -342,8 +343,10 @@ object Dedup {
     nearDupsFromSig(minhashSignature(docs, bands), minShared, bucketCap)
 
   /** The AND-amplified bucket self-join over an existing signature
-    * table — the registered e4/e5 audits feed this from the shared
-    * signature build instead of re-shingling per query. */
+    * table: (doc_a, doc_b, shared_bands) for the pairs colliding in at
+    * least `minShared` bands. At `minShared = 1` it is the session-shared
+    * candidate level ([[DedupQueries.sharedBandPairs]]), which the
+    * registered e4/e5/g24 read instead of re-running the join. */
   private[graft] def nearDupsFromSig(rawSig: DataFrame, minShared: Int,
       bucketCap: Option[Int] = None,
       capTab: Option[DataFrame] = None): DataFrame = {
@@ -701,16 +704,19 @@ object Dedup {
     * shared-band histogram; the ladder is a cumulative window over the
     * |bands|-row spine — nothing per-pair survives the first groupBy. */
   def bandAgreementCurve(docs: DataFrame, bands: Int = 4): DataFrame =
-    bandAgreementFromSig(minhashSignature(docs, bands), bands)
+    bandAgreementFromPairs(
+      nearDupsFromSig(minhashSignature(docs, bands), 1), bands)
 
-  /** [[bandAgreementCurve]] over an existing signature table (the
-    * registered g24 reads the shared session signature build). */
-  private[graft] def bandAgreementFromSig(sig: DataFrame,
-      bands: Int = 4,
-      capTab: Option[DataFrame] = None): DataFrame = {
-    val hist = nearDupsFromSig(sig, 1, capTab = capTab)
+  /** [[bandAgreementCurve]] over an existing (doc_a, doc_b, shared_bands)
+    * pair table holding every pair that shares at least one band. The
+    * registered g24 reads the session-shared candidate level
+    * ([[DedupQueries.sharedBandPairs]]), so it runs no bucket join of its
+    * own: its plan is the histogram over the stored pairs. */
+  private[graft] def bandAgreementFromPairs(pairs: DataFrame,
+      bands: Int = 4): DataFrame = {
+    val hist = pairs
       .groupBy("shared_bands").agg(count(lit(1)).as("n"))
-    val spine = sig.sparkSession.range(1, bands + 1)
+    val spine = pairs.sparkSession.range(1, bands + 1)
       .select(col("id").as("min_bands"))
     val cw = Window.orderBy(col("min_bands").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1017,18 +1023,36 @@ object DedupQueries {
   private[graft] def sharedClusters(s: SparkSession, d: String): DataFrame =
     SharedBuild(s, d, "clusters")(dedupClusters(sharedCandidates(s, d)))
 
-  /** Session-shared materialized LSH candidate-pair table — the same
+  /** Session-shared materialized LSH candidate level — the same
     * persisted-table discipline one level lower: the signature build +
-    * capped bucket self-join runs ONCE per corpus, and every consumer of
-    * the candidate graph ([[sharedClusters]] and the graph analytics
-    * g9/g22/g23) reads the stored pairs. The pair table is tiny relative
-    * to the corpus (bounded by Σ min(df,cap)²/2 over buckets), so
-    * materializing it is cheap; content is independent of which query
-    * builds it first. */
-  private[graft] def sharedCandidates(s: SparkSession, d: String): DataFrame =
+    * capped (band, minh) bucket self-join runs ONCE per corpus. The level
+    * stores (doc_a, doc_b, shared_bands): every pair (doc_a < doc_b)
+    * colliding in at least one capped bucket, with the number of bands it
+    * collides in — [[Dedup.nearDupsFromSig]] at `minShared = 1`. Readers:
+    * the pair graph [[sharedCandidates]], the full-band near-dup audits
+    * e4/e5 (`shared_bands >= 4`) and g24's band-agreement histogram. The
+    * pair table is tiny relative to the corpus (bounded by
+    * Σ min(df,cap)²/2 over buckets), so materializing it is cheap;
+    * content is independent of which query builds it first. */
+  private[graft] def sharedBandPairs(s: SparkSession, d: String): DataFrame =
     SharedBuild(s, d, "candidates")(Materialize.frame(
-      candidatesFromSig(sharedSignatures(s, d),
+      nearDupsFromSig(sharedSignatures(s, d), 1,
         capTab = Some(sharedBucketCap(s, d)))))
+
+  /** The LSH candidate-pair graph (doc_a, doc_b): the pair projection of
+    * [[sharedBandPairs]], whose rows are already distinct pairs. Every
+    * consumer of the candidate graph ([[sharedClusters]], g2b and the
+    * graph analytics g9/g22/g23) reads it. */
+  private[graft] def sharedCandidates(s: SparkSession, d: String): DataFrame =
+    sharedBandPairs(s, d).select(col("doc_a"), col("doc_b"))
+
+  /** Docs a full-band near-dup rule drops: `doc_b` of every candidate
+    * pair sharing all 4 bands (the g2c/g13 convention), read from
+    * [[sharedBandPairs]]. */
+  private[graft] def sharedFullBandDropped(s: SparkSession,
+      d: String): DataFrame =
+    sharedBandPairs(s, d).where(col("shared_bands") >= 4)
+      .select(col("doc_b").as("doc_id")).distinct()
 
   /** Session-shared materialized DISTINCT (doc_id, sh_h) shingle table —
     * the bottom of the shared-build ladder (shingles → signatures →
@@ -1047,10 +1071,10 @@ object DedupQueries {
   /** Session-shared materialized 4-band minhash signature table, built
     * from [[sharedShingles]] (min over the distinct shingle set equals
     * min over the multiset, so this is value-identical to signing the
-    * raw shingle stream). Consumers: the candidate build, the uncapped
-    * bucket census g21, the band-agreement curve g24, the split
-    * incremental g13 (signatures are per-doc, so a doc-subset's table
-    * is a doc_id filter of this one), and the e4/e5 near-dup audits. */
+    * raw shingle stream). Consumers: the candidate build (which e4, e5
+    * and g24 read), the bucket cap, the uncapped bucket census g21, the
+    * split incremental g13 (signatures are per-doc, so a doc-subset's
+    * table is a doc_id filter of this one) and g25's augmented table. */
   private[graft] def sharedSignatures(s: SparkSession, d: String): DataFrame =
     SharedBuild(s, d, "signatures")(Materialize.frame(
       signatureFromShingles(sharedShingles(s, d), 4)))
@@ -1634,8 +1658,7 @@ object DedupQueries {
         "combinable rollups, |bands| rows"),
 
     Q("g24_band_agreement",
-      (s, d) => Dedup.bandAgreementFromSig(sharedSignatures(s, d), 4,
-        capTab = Some(sharedBucketCap(s, d))),
+      (s, d) => Dedup.bandAgreementFromPairs(sharedBandPairs(s, d), 4),
       Some(s"""WITH $shinglesSqlCte,
               |$cappedSigSqlCtes,
               |ps AS (

@@ -317,17 +317,14 @@ object PipelineQueries {
         // incremental convention) vs t2's quality score, composed from
         // the same kernels as the standalone queries so the answer
         // can't drift from them. Shape: the dropped-id set is a
-        // distinct projection of the banded candidate join (bounded by
-        // real dup density), LEFT-joined onto the per-doc quality
+        // distinct projection of the session-shared candidate level
+        // (bounded by real dup density), LEFT-joined onto the per-doc quality
         // table on doc_id, then a 2-row rollup with DECIMAL-exact
         // means (the a14 discipline).
         import graft.functions.Parity
         val q = TextAnalysis.qualityScore(Tables.documents(s, d))
           .select(col("doc_id"), col("quality"), col("n_tokens"))
-        val dropped = Dedup.nearDupsFromSig(
-            DedupQueries.sharedSignatures(s, d), 4,
-            capTab = Some(DedupQueries.sharedBucketCap(s, d)))
-          .select(col("doc_b").as("doc_id")).distinct()
+        val dropped = DedupQueries.sharedFullBandDropped(s, d)
           .withColumn("dr", lit(1L))
         q.join(dropped, Seq("doc_id"), "left")
           .select(when(col("dr").isNull, 1L).otherwise(0L).as("kept"),
@@ -390,10 +387,7 @@ object PipelineQueries {
               col("p_alpha")).as("pq"))
         val exactKept = Dedup.exactDedup(docs)
           .select(col("doc_id")).withColumn("ke", lit(1L))
-        val nearDropped = Dedup.nearDupsFromSig(
-            DedupQueries.sharedSignatures(s, d), 4,
-            capTab = Some(DedupQueries.sharedBucketCap(s, d)))
-          .select(col("doc_b").as("doc_id")).distinct()
+        val nearDropped = DedupQueries.sharedFullBandDropped(s, d)
           .withColumn("nd", lit(1L))
         flags.join(exactKept, Seq("doc_id"), "left")
           .join(nearDropped, Seq("doc_id"), "left")

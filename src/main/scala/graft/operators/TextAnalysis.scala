@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -29,17 +29,27 @@ object TextAnalysis {
     * oracle SQL it is interpolated into). */
   val Stopwords: Seq[String] = graft.plans.GopherStats.Stopwords
 
-  /** Per-doc token stats: total tokens, stopword hits, char sum. */
+  /** Per-doc token stats: total tokens, stopword hits, char sum, plus the
+    * doc's `lang` and `n_chars`. One per-row projection of the native
+    * [[graft.plans.GopherStats]] byte pass — no token rows, no shuffle —
+    * with the same whitespace tokens as [[Dedup.tokensExpr]].
+    * Documents with no token (empty, whitespace-only or null text) are
+    * absent, so every ratio over `n_tokens` is defined.
+    *
+    * Assumes `doc_id` is the key of `documents` (one row per id), as
+    * [[gopherFlags]] does; every fixture (FIXTURES.md, the
+    * `np.arange(n)` ids of the benchmark generator) satisfies it. A
+    * duplicated id gives one output row per input row. */
   private def tokenStats(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"), col("lang"), col("n_chars"),
-      explode(expr(tokensExpr)).as("w"))
-      .groupBy("doc_id")
-      .agg(
-        count(lit(1)).as("n_tokens"),
-        sum(when(col("w").isin(Stopwords: _*), 1L).otherwise(0L)).as("n_stop"),
-        sum(length(col("w"))).as("sum_wlen"),
-        first(col("lang")).as("lang"),
-        first(col("n_chars")).as("n_chars"))
+    // keeps exactly the rows with n_tokens > 0 (a char outside the five
+    // delimiters). A filter on n_tokens itself would be pushed below the
+    // projection as a second gopher_stats call per row.
+    docs.where(col("text").rlike("[^ \\t\\n\\r\\f]"))
+      .select(col("doc_id"), col("lang"), col("n_chars"),
+        GraftColumns.gopherStats(col("text")).as("gs"))
+      .select(col("doc_id"), col("gs.n_tokens").as("n_tokens"),
+        col("gs.n_stop").as("n_stop"), col("gs.sum_wlen").as("sum_wlen"),
+        col("lang"), col("n_chars"))
 
   /** Language-ID heuristic: stopword-ratio threshold → 'en' vs 'other'. */
   def langId(docs: DataFrame, threshold: Double = 0.05): DataFrame =
@@ -767,7 +777,7 @@ object TextAnalysis {
     // real corpus; see the expression's doc for the dialect note).
     val perDoc = docs
       .select(col("doc_id"), col("source"),
-        expr("gopher_stats(text)").as("gs"))
+        GraftColumns.gopherStats(col("text")).as("gs"))
       .select(col("doc_id"), col("source"),
         col("gs.n_tokens").as("n_tokens"),
         col("gs.sum_wlen").as("sum_wlen"),

@@ -37,6 +37,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * regex dialects agree, and the equivalence spec pins it).
   *
   * Null text propagates null (split/HOFs over null did the same).
+  *
+  * Invalid UTF-8 (a string made by `cast(binary as string)`): the token,
+  * stopword and alpha counts agree with the `split` form, but `sum_wlen`
+  * can differ. `split` decodes the bytes first, turning each malformed
+  * sequence into one U+FFFD; this pass counts the bytes that are not
+  * continuation bytes, so a continuation byte (0x80-0xBF) with no lead
+  * byte before it counts as no character. PropertySpec pins the answer
+  * on one such line.
+  *
+  * Operators build it as a Column with
+  * `org.apache.spark.sql.GraftColumns.gopherStats`, which works on any
+  * session; `GraftExtensions` registers the name for SQL text. Readers:
+  * TextAnalysis' per-doc token stats (t1/t2/t13 and every quality-score
+  * consumer) and Gopher flags (t19/t36/e5).
   */
 case class GopherStats(child: Expression) extends UnaryExpression {
 

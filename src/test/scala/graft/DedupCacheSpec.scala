@@ -53,6 +53,20 @@ class DedupCacheSpec extends SparkSpec {
     assert(total == before + perSession)
   }
 
+  test("e4, e5 and g24 add no entry after g2_minhash_pairs: they read its candidate level") {
+    val dir = sf("sf0.001")
+    val s = spark.newSession()
+    def run(name: String): Unit =
+      Registry.all.find(_.name == name).get.run(s, dir).collect()
+    run("g2_minhash_pairs")
+    val built = SharedBuild.levelCounts
+    assert(built.contains("candidates"), built.toString)
+    Seq("e4_dedup_quality", "e5_yield_funnel", "g24_band_agreement").foreach { n =>
+      run(n)
+      assert(SharedBuild.levelCounts === built, n)
+    }
+  }
+
   test("newSession-per-request on one LIVE context stays bounded (ADVICE r13)") {
     val dir = sf("sf0.001")
     // start from an empty registry so entries == sessions below (other

@@ -891,6 +891,28 @@ class PlanAuditSpec extends SparkSpec {
     assert(exchangeKeys(t23).toSet.subsetOf(Set("w")), exchangeKeys(t23).toString)
   }
 
+  test("t1/t2/t13: per-doc token stats are one per-row byte pass — no Generate, no doc_id shuffle") {
+    Seq("t1_langid", "t2_quality", "t13_langid_confusion").foreach { n =>
+      val p = plan(n)
+      // computed once per row: in the projection, never in a filter
+      val gs = p.linesIterator.filter(_.contains("gopher_stats(")).toSeq
+      assert(gs.nonEmpty && gs.forall(_.trim.matches("[*(0-9) +:|-]*Project .*")),
+        s"$n\n" + p.take(1200))
+      assert(!p.contains("Generate"), s"$n\n" + p.take(1200))
+      assert(!p.contains("Exchange hashpartitioning(doc_id"), s"$n\n" + p.take(1200))
+    }
+  }
+
+  test("e4/e5/g24 read the shared candidate level — no (band, minh) join of their own") {
+    val bucketKey = "\\b(band|minh)#".r
+    Seq("e4_dedup_quality", "e5_yield_funnel", "g24_band_agreement").foreach { n =>
+      val p = plan(n)
+      val joins = p.linesIterator.filter(_.contains("Join")).toSeq
+      assert(!joins.exists(l => bucketKey.findFirstIn(l).isDefined),
+        s"$n\n" + joins.mkString("\n"))
+    }
+  }
+
   test("e5: yield funnel joins per-doc flags by id — no pairwise, one stack unpivot") {
     val p = plan("e5_yield_funnel")
     assertNoPairwiseJoins(p, "e5")

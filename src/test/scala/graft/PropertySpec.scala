@@ -237,6 +237,76 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("langId and qualityScore match the explode + groupBy token stats on arbitrary unicode text") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import graft.functions.Parity.pround
+    import operators.TextAnalysis
+    // the per-doc stats as they were computed before the gopher_stats
+    // byte pass, kept as the reference: one row per token, grouped by doc
+    def explodeStats(docs: DataFrame): DataFrame =
+      docs.select(col("doc_id"), col("lang"),
+          explode(expr(operators.Dedup.tokensExpr)).as("w"))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_tokens"),
+          sum(when(col("w").isin(TextAnalysis.Stopwords: _*), 1L).otherwise(0L))
+            .as("n_stop"),
+          sum(length(col("w"))).as("sum_wlen"),
+          first(col("lang")).as("lang"))
+    def refLangId(docs: DataFrame): DataFrame = explodeStats(docs)
+      .select(col("doc_id"),
+        (col("n_stop").cast("double") / col("n_tokens").cast("double")).as("stop_ratio"),
+        col("lang"))
+      .select(col("doc_id"), pround(col("stop_ratio"), 6).as("stop_ratio"),
+        when(col("stop_ratio") >= 0.05, lit("en")).otherwise(lit("other")).as("pred_lang"),
+        (col("lang") === "en").cast("int").as("is_en"))
+    def refQuality(docs: DataFrame): DataFrame = explodeStats(docs)
+      .select(col("doc_id"), col("n_tokens"),
+        pround(col("sum_wlen").cast("double") / col("n_tokens").cast("double"), 4).as("avg_wlen"),
+        pround(col("n_stop").cast("double") / col("n_tokens").cast("double"), 4).as("stop_ratio"),
+        pround(least(col("n_tokens").cast("double") / 100.0, lit(1.0)) * 0.5 +
+          (col("n_stop").cast("double") / col("n_tokens").cast("double")) * 0.5, 4)
+          .as("quality"))
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+
+    val sep = Gen.oneOf(" ", "\t", "\n", "\r", "\f", "\u000B", "\u00A0",
+      "\u0085", "\u2028", "  \t ")
+    val word = Gen.oneOf(Gen.alphaNumStr.map(_.take(6)),
+      Gen.oneOf("é", "中", "😀", "naïve", "The", "the", "OF", "of", "a", "A"))
+    val line = Gen.listOf(Gen.oneOf(word, sep)).map(_.mkString)
+    val text = Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some("")),
+      1 -> Gen.oneOf(" ", "\t\n", " \r\f ").map(Some(_)), 6 -> line.map(Some(_)))
+    val doc = Gen.zip(text, Gen.oneOf("en", "fr"))
+    // one line of invalid UTF-8 (id -1): five tokens, three of them with a
+    // bare continuation byte 0x80 or a truncated sequence
+    val invalid = spark.sql("SELECT -1L AS doc_id, " +
+      "cast(X'2061C3206280FF09E4B8AD0CE4B82063800B64' AS string) AS text, " +
+      "'en' AS lang, 17L AS n_chars")
+    forAllSamples(Gen.nonEmptyListOf(doc), n = 8) { ds =>
+      val docs = ds.zipWithIndex
+        .map { case ((t, l), i) => (i.toLong, t, l, t.fold(0L)(_.length.toLong)) }
+        .toDF("doc_id", "text", "lang", "n_chars").union(invalid)
+      // docs with no token (null, empty, whitespace-only) are absent
+      val withTokens = ds.zipWithIndex.collect {
+        case ((Some(t), _), i) if t.split("[ \t\n\r\f]+").exists(_.nonEmpty) => i.toLong
+      }.toSet + -1L
+      val lang = TextAnalysis.langId(docs)
+      assert(lang.select("doc_id").as[Long].collect().toSet === withTokens)
+      assert(rows(lang) === rows(refLangId(docs)))
+      // the byte pass and the decoded split agree on every valid line
+      val valid = docs.where(col("doc_id") >= 0L)
+      assert(rows(TextAnalysis.qualityScore(valid)) === rows(refQuality(valid)))
+    }
+    // on the invalid line they agree on the token and stopword counts but
+    // not on word length: split decodes each bad byte to one U+FFFD, the
+    // byte pass counts a bare continuation byte as no character
+    // (a^ + b + ^ + 中 + ^ + c + \x0B + d = 9 chars over 5 tokens, not 11)
+    val q = TextAnalysis.qualityScore(invalid).as[(Long, Long, Double, Double, Double)].head()
+    assert(q === ((-1L, 5L, 1.8, 0.0, 0.025)))
+    assert(refQuality(invalid).select("avg_wlen").as[Double].head() === 2.2)
+  }
+
   test("chunk dedup conserves chunks for arbitrary tiny-alphabet corpora") {
     import spark.implicits._
     // 3-letter alphabet forces heavy window collisions

@@ -541,4 +541,40 @@ class TextAnalysisSpec extends SparkSpec {
     assert(b.getAs[Long]("lexicon_hits") == 1L && b.getAs[Long]("total_tokens") == 4L)
     assert(b.getAs[Double]("mean_hit_rate") == 0.25) // empty doc excluded from the mean
   }
+
+  test("t1, t2, t13 and t19 run on a session built without spark.sql.extensions") {
+    // gopher_stats is built as a Column, not looked up by name; the
+    // shared test session carries GraftExtensions, so the plain session
+    // runs in a child JVM and its results are compared with this one's
+    val names = Seq("t1_langid", "t2_quality", "t13_langid_confusion", "t19_gopher_rules")
+    val out = java.nio.file.Files.createTempDirectory("text_plain").toString
+    runInChildJvm(PlainSessionTextQueries, Seq(sf("sf0.001"), out) ++ names: _*)
+    names.foreach { n =>
+      val want = Registry.all.find(_.name == n).get.run(spark, sf("sf0.001"))
+        .toJSON.collect().sorted.toList
+      val got = spark.read.text(s"$out/$n").as[String].collect().sorted.toList
+      assert(got.nonEmpty && got === want, n)
+    }
+  }
+}
+
+/** Child-JVM half of TextAnalysisSpec's plain-session case: runs the
+  * named registered queries on a SparkSession with no extensions and
+  * writes each result as JSON lines to `<outDir>/<name>`.
+  * Args: sfDir, outDir, query names. */
+object PlainSessionTextQueries {
+  def main(args: Array[String]): Unit = {
+    val spark = org.apache.spark.sql.SparkSession.builder().master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "2")
+      .getOrCreate()
+    try {
+      require(!spark.sparkContext.getConf.contains("spark.sql.extensions"))
+      require(!spark.catalog.functionExists("gopher_stats"), "GraftExtensions loaded")
+      args.drop(2).foreach { name =>
+        Registry.all.find(_.name == name).get.run(spark, args(0))
+          .toJSON.write.text(s"${args(1)}/$name")
+      }
+    } finally spark.stop()
+  }
 }

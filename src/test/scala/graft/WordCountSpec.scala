@@ -76,15 +76,7 @@ class WordCountSpec extends SparkSpec {
     val lines = Seq("the quick brown fox", "  the\tlazy  dog ", "the the the", "", "fox")
     Files.write(dir.resolve("corpus.txt"), lines.mkString("\n").getBytes("UTF-8"))
     val out = dir.resolve("out").toString
-    val jvm = java.lang.management.ManagementFactory.getRuntimeMXBean
-      .getInputArguments.toArray.map(_.toString).filter(_.startsWith("--add-opens"))
-    val cmd = Seq(s"${sys.props("java.home")}/bin/java", "-Xmx512m") ++ jvm ++
-      Seq("-cp", sys.props("java.class.path"), PlainSessionWordCount.getClass.getName.stripSuffix("$"),
-        dir.resolve("corpus.txt").toString, out)
-    val log = new StringBuilder
-    val code = scala.sys.process.Process(cmd)
-      .!(scala.sys.process.ProcessLogger(l => log.append(l).append('\n')))
-    assert(code === 0, log.takeRight(3000).toString)
+    runInChildJvm(PlainSessionWordCount, dir.resolve("corpus.txt").toString, out)
     val got = spark.read.text(out).as[String].collect().sorted.toList
     assert(got === List("brown\t1", "dog\t1", "fox\t2", "lazy\t1", "quick\t1", "the\t5"))
   }
