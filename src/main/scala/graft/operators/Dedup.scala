@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
 import graft.{Q, SharedBuild, Tables}
 import graft.functions.Parity.pround
@@ -360,31 +361,41 @@ object Dedup {
   }
 
   /** G6: dedup clusters — connected components over the candidate-pair
-    * graph by min-label propagation WITH GRAPH CONTRACTION. Each round:
-    * (a) every cluster takes the min of itself and its neighboring
-    * clusters plus one pointer jump (the doubling step → O(log diameter)
-    * rounds; real LSH graphs chain — sf0.01 already has a 220-node
-    * component of diameter 23); (b) node labels are composed through the
-    * relabel map; (c) the edge set is CONTRACTED to distinct
-    * inter-cluster edges. Contraction is what makes this scale: duplicate
-    * cliques (the dominant near-dup shape — the 20× sweep graph has 35M
-    * directed edges, mostly 20-cliques) collapse to a single node after
-    * one round, so later rounds join a vanishing edge set instead of
-    * re-scanning all edges every round. Terminates when no inter-cluster
-    * edge remains. Labels only decrease and always name a component
-    * member, so the fixpoint is the component minimum. Lineage is
-    * truncated per round with localCheckpoint, the standard guard
-    * against iterative-plan blowup. Output: (doc_id, cluster) where
-    * cluster = min doc_id in the component; survivors of cluster-dedup
-    * are the rows with doc_id == cluster. */
+    * graph, labelled by their least doc_id. Two phases:
+    *
+    *  - a partition-local union-find ([[LocalForest]]) reads each
+    *    partition's pairs once, before any shuffle, and emits one
+    *    (node, root) row per node it saw, root = the least id the
+    *    partition's pairs join it to. Cliques — the dominant near-dup
+    *    shape — collapse to stars here. If the whole graph was read as
+    *    ONE forest (one non-empty partition, never flushed at the
+    *    per-task entry budget), its roots ARE the component minima and
+    *    the forest is the answer: one job, no global round. Curation's
+    *    candidate level is coalesced to one partition, so it takes this
+    *    path.
+    *  - otherwise the forests' rows, read as node–root star edges (one
+    *    per node seen, however dense the partition's pairs), go through
+    *    global min-label propagation WITH GRAPH CONTRACTION.
+    *    Each round: (a) every cluster takes the min of itself and its
+    *    neighboring clusters plus pointer jumps (the doubling step →
+    *    O(log diameter) rounds; real LSH graphs chain — sf0.01 already
+    *    has a 220-node component of diameter 23); (b) the edge set is
+    *    CONTRACTED to distinct inter-cluster edges, so duplicate cliques
+    *    that span partitions collapse to a single node after one round
+    *    and later rounds join a vanishing edge set. Terminates when no
+    *    inter-cluster edge remains; the row count of each round's
+    *    materialized edge set is the test, so no emptiness probe runs.
+    *    Labels only decrease and always name a component member, so the
+    *    fixpoint is the component minimum. Lineage is truncated per round
+    *    by [[Materialize]], the standard guard against iterative-plan
+    *    blowup.
+    *
+    * Output: (doc_id, cluster) where cluster = min doc_id in the
+    * component, one row per doc_id that appears in a pair; survivors of
+    * cluster-dedup are the rows with doc_id == cluster. */
   def dedupClusters(pairs: DataFrame, maxIter: Int = 25): DataFrame =
     dedupClustersWithRounds(pairs, maxIter)._1
 
-  /** [[dedupClusters]] plus the number of contraction rounds it ran —
-    * the observable the O(log diameter) convergence claim is tested
-    * against (DedupClusterSpec pins a star graph to ≤2 rounds and a
-    * 64-chain to a logarithmic bound; a regression to per-hop
-    * propagation would blow those up immediately). */
   /** g11: quality-aware representative per near-dup cluster — instead of
     * g1's "keep the smallest doc_id", keep the copy a curation pipeline
     * actually wants: the best t2 quality score (ties → smallest id).
@@ -462,21 +473,47 @@ object Dedup {
             / col("exact_pairs").cast("double"), 6)).as("pair_recall"))
   }
 
+  /** [[dedupClusters]] plus the number of global contraction rounds it
+    * ran — the observable the O(log diameter) convergence claim is tested
+    * against (DedupClusterSpec pins a star graph to ≤2 rounds and a
+    * 64-chain to a logarithmic bound; a regression to per-hop
+    * propagation would blow those up immediately). 0 when the local
+    * forest was the whole answer. */
   private[graft] def dedupClustersWithRounds(
-      pairs: DataFrame, maxIter: Int = 25): (DataFrame, Int) = {
-    // both directions from ONE scan of `pairs` (an explode, not a union —
-    // a union would execute the upstream candidate pipeline twice)
-    // No up-front distinct: the doubled set of a doc_a<doc_b pair table
-    // cannot contain duplicates (forward edges have src<dst, reversed
-    // src>dst), and duplicate edges from arbitrary inputs are absorbed by
-    // the groupBy below anyway — a distinct here would be a full shuffle
-    // of the pipeline's largest dataset (220M rows at the 50x sweep)
-    var edges = pairs
+      pairs: DataFrame, maxIter: Int = 25): (DataFrame, Int) =
+    dedupClustersWithRounds(pairs, maxIter, LocalForest.MaxEntries)
+
+  /** [[dedupClustersWithRounds]] with the local forest flushing at
+    * `forestEntries` nodes per task. */
+  private[graft] def dedupClustersWithRounds(
+      pairs: DataFrame, maxIter: Int, forestEntries: Int): (DataFrame, Int) = {
+    val pieces = pairs.sparkSession.sparkContext.longAccumulator
+    val forest: Iterator[(Long, Long)] => Iterator[(Long, Long)] =
+      LocalForest.roots(_, forestEntries, pieces)
+    val longPair = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    // null endpoints name no document
+    val roots = Materialize.frame(pairs
+      .select(col("doc_a").cast("long"), col("doc_b").cast("long")).na.drop()
+      .as(longPair).mapPartitions(forest)(longPair)
+      .toDF("node", "root"))
+    // read as one forest: every pair of a component was unioned into it
+    if (pieces.value <= 1L) (roots.toDF("doc_id", "cluster"), 0)
+    else globalRounds(roots, maxIter)
+  }
+
+  /** The global phase of [[dedupClusters]] over the local forests'
+    * (node, root) rows, read as star edges. */
+  private def globalRounds(roots: DataFrame, maxIter: Int): (DataFrame, Int) = {
+    // both directions from ONE scan (an explode, not a union). Root rows
+    // (root, root) keep self-loop-only nodes in round 1's map domain;
+    // duplicate edges are absorbed by the groupBy below
+    var edges = roots
       .select(explode(array(
-        struct(col("doc_a").as("src"), col("doc_b").as("dst")),
-        struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
+        struct(col("node").as("src"), col("root").as("dst")),
+        struct(col("root").as("src"), col("node").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .transform(Materialize.frame)
+    // two or more forests hold at least one row each
+    var nEdges = 1L
     // r20 (VERDICT r19 item 5): the node-scale label table is no longer
     // composed (joined + materialized) inside every round — each round
     // only stores its cluster-keyed relabel map, and ONE backward
@@ -496,7 +533,7 @@ object Dedup {
     // family's three consumers.
     var maps = List.empty[DataFrame] // most recent round's map first
     var iter = 0
-    while (!edges.isEmpty && iter < maxIter) {
+    while (nEdges > 0 && iter < maxIter) {
       // every endpoint appears as src (edges are symmetric), so the
       // relabel map covers every cluster that still has an edge
       val step = edges.groupBy(col("src"))
@@ -525,7 +562,7 @@ object Dedup {
       maps ::= jumped
       // contract: map both endpoints, drop intra-cluster edges, dedupe.
       // Symmetry is preserved (both directions map pairwise).
-      edges = edges
+      val (contracted, n) = Materialize.counted(edges
         .join(jumped.select(col("u").as("su"), col("lu").as("sl")),
           col("src") === col("su"), "left")
         .join(jumped.select(col("u").as("du"), col("lu").as("dl")),
@@ -533,23 +570,23 @@ object Dedup {
         .select(coalesce(col("sl"), col("src")).as("src"),
           coalesce(col("dl"), col("dst")).as("dst"))
         .where(col("src") =!= col("dst"))
-        .distinct()
-        .transform(Materialize.frame)
+        .distinct())
+      edges = contracted
+      nEdges = n
       iter += 1
     }
     // A silent partial clustering would make cluster-dedup keep extra
     // survivors with no signal — converging graphs finish in O(log
     // diameter) rounds, so hitting maxIter means the input is
     // pathological (or maxIter was lowered); surface it loudly.
-    if (!edges.isEmpty)
+    if (nEdges > 0)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"dedupClusters: $maxIter rounds exhausted with inter-cluster " +
           "edges remaining — the returned clustering is PARTIAL (labels " +
           "are valid upper approximations, components may stay split)")
     val labels = maps match {
       case Nil =>
-        // zero rounds ran (empty pair table, or maxIter = 0): the old
-        // identity-label table, unchanged
+        // zero rounds ran (maxIter = 0): the identity-label table
         edges.select(col("src").as("node")).distinct()
           .select(col("node"), col("node").as("cluster"))
           .transform(Materialize.frame)
@@ -1840,4 +1877,122 @@ object DedupQueries {
         "the outcome level, directly comparable to g25's number at the " +
         "same corpus and budget"),
   )
+}
+
+/** [[Dedup.dedupClusters]]'s partition-local union-find. Reads a
+  * partition's undirected (a, b) pairs once and emits its spanning
+  * forest as one (node, root) row per node, root = the least id the pairs
+  * read so far join the node to. When a pair would take the forest past
+  * its node budget, the forest so far is emitted and cleared, and reading
+  * resumes at that pair, so memory per task stays bounded. Every emitted
+  * forest keeps its nodes connected to its roots, so the forests together
+  * have the components of the pairs. `pieces` counts the forests emitted:
+  * a graph emitted as at most one forest was read whole, and its roots
+  * are the component minima. */
+private[graft] object LocalForest {
+
+  /** Node budget per forest: ~20 B per node (id, parent, two hash
+    * slots), so a task's forest stays under ~40 MB with the table's
+    * growth slack. The seed-1 curation candidate graph has 124 nodes. */
+  val MaxEntries = 1 << 20
+
+  def roots(pairs: Iterator[(Long, Long)], maxEntries: Int,
+      pieces: LongAccumulator): Iterator[(Long, Long)] =
+    new Iterator[(Long, Long)] {
+      private val forest = new UnionFind
+      private var pending: (Long, Long) = null // the pair that did not fit
+      private var emitted = -1                 // nodes emitted; -1: reading
+
+      def hasNext: Boolean = {
+        if (emitted >= 0 && emitted < forest.size) return true
+        if (emitted >= 0) { forest.clear(); emitted = -1 }
+        var full = false
+        while (!full && (pending != null || pairs.hasNext)) {
+          val p = if (pending != null) pending else pairs.next()
+          pending = null
+          full = forest.size > 0 &&
+            forest.size + forest.absent(p._1, p._2) > maxEntries
+          if (full) pending = p else forest.union(p._1, p._2)
+        }
+        if (forest.size > 0) { emitted = 0; pieces.add(1L) }
+        forest.size > 0
+      }
+
+      def next(): (Long, Long) = {
+        if (!hasNext) throw new NoSuchElementException
+        emitted += 1
+        (forest.id(emitted - 1), forest.id(forest.root(emitted - 1)))
+      }
+    }
+}
+
+/** Union-find over Long ids with an open-addressing index. Union links
+  * the larger root under the smaller, so a set's root is its least id;
+  * `root` halves paths as it walks. */
+private[operators] final class UnionFind {
+  private var ids = new Array[Long](64)
+  private var parent = new Array[Int](64)
+  private var slots = new Array[Int](128) // entry index + 1; 0 = free
+  var size = 0
+
+  def id(i: Int): Long = ids(i)
+
+  def root(i: Int): Int = {
+    var x = i
+    while (parent(x) != x) {
+      parent(x) = parent(parent(x))
+      x = parent(x)
+    }
+    x
+  }
+
+  def union(a: Long, b: Long): Unit = {
+    val ra = root(index(a))
+    val rb = root(index(b))
+    if (ids(ra) < ids(rb)) parent(rb) = ra
+    else if (rb != ra) parent(ra) = rb
+  }
+
+  /** How many of `a` and `b` are not entries yet. */
+  def absent(a: Long, b: Long): Int =
+    (if (slots(slot(a)) == 0) 1 else 0) +
+      (if (a != b && slots(slot(b)) == 0) 1 else 0)
+
+  def clear(): Unit = {
+    java.util.Arrays.fill(slots, 0)
+    size = 0
+  }
+
+  private def slot(x: Long): Int = {
+    val mask = slots.length - 1
+    val h = x * 0x9E3779B97F4A7C15L
+    var s = (h ^ (h >>> 32)).toInt & mask
+    while (slots(s) != 0 && ids(slots(s) - 1) != x) s = (s + 1) & mask
+    s
+  }
+
+  private def index(x: Long): Int = {
+    val s = slot(x)
+    if (slots(s) != 0) slots(s) - 1
+    else {
+      if (size == ids.length) {
+        ids = java.util.Arrays.copyOf(ids, size * 2)
+        parent = java.util.Arrays.copyOf(parent, size * 2)
+      }
+      ids(size) = x
+      parent(size) = size
+      size += 1
+      if (size * 2 > slots.length) rehash() else slots(s) = size
+      size - 1
+    }
+  }
+
+  private def rehash(): Unit = {
+    slots = new Array[Int](slots.length * 2)
+    var i = 0
+    while (i < size) {
+      slots(slot(ids(i))) = i + 1
+      i += 1
+    }
+  }
 }

@@ -214,9 +214,14 @@ object Graph {
       .agg(pround((sum(col("c")).cast(DecimalType(25, 0)) *
           lit(new java.math.BigDecimal("1E-12"))).cast("double"), 9)
         .as("ra_score"))
+    // The exclusion also names ra_score (never null: every group sums at
+    // least one non-null c), so the condition reaches past the grouping
+    // keys and Catalyst cannot push the anti-join below the aggregate —
+    // which it otherwise does whenever `p` is small enough to broadcast,
+    // probing the F³ wedge stream instead of the F² pairs.
     scored
-      .join(p, scored("x") === p("doc_a") && scored("y") === p("doc_b"),
-        "left_anti")
+      .join(p, scored("x") === p("doc_a") && scored("y") === p("doc_b") &&
+        scored("ra_score").isNotNull, "left_anti")
       .select(col("x").as("doc_a"), col("y").as("doc_b"), col("ra_score"))
       .orderBy(col("ra_score").desc, col("doc_a"), col("doc_b"))
       .limit(k)

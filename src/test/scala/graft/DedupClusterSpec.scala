@@ -32,8 +32,11 @@ class DedupClusterSpec extends SparkSpec {
     // edge set to nothing); per-hop propagation would also take 2 here,
     // but the hub key concentrating 1e4 edges in one group is exactly
     // the skew the groupBy(src) relabel has to absorb without help.
+    // Forest budget 2: every pair is its own local forest, so the global
+    // rounds see the whole star.
     val pairs = (1L to 10000L).map(i => (0L, i)).toDF("doc_a", "doc_b")
-    val (labels, rounds) = Dedup.dedupClustersWithRounds(pairs)
+    val (labels, rounds) = Dedup.dedupClustersWithRounds(pairs, 25, 2)
+    assert(rounds >= 1, "the star must reach the global rounds")
     assert(rounds <= 2, s"star should contract in <=2 rounds, took $rounds")
     val got = labels.as[(Long, Long)].collect()
     assert(got.length === 10001)
@@ -43,9 +46,11 @@ class DedupClusterSpec extends SparkSpec {
   test("64-chain converges in logarithmically few rounds (pointer jumping)") {
     // diameter 63; one min-propagation hop + two pointer jumps per round
     // multiply effective reach, so rounds must stay well under the ~32
-    // a plain per-hop propagation would need
+    // a plain per-hop propagation would need. Forest budget 2: the global
+    // rounds see the whole chain.
     val pairs = (1L until 64L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (labels, rounds) = Dedup.dedupClustersWithRounds(pairs)
+    val (labels, rounds) = Dedup.dedupClustersWithRounds(pairs, 25, 2)
+    assert(rounds >= 1, "the chain must reach the global rounds")
     assert(rounds <= 8, s"64-chain should need O(log 63) rounds, took $rounds")
     assert(labels.as[(Long, Long)].collect().forall(_._2 == 1L))
   }
@@ -54,13 +59,68 @@ class DedupClusterSpec extends SparkSpec {
     // labels must still be an upper approximation: every label names a
     // member of the node's true component (here: everything is one
     // component, so any label in 1..12 is valid; full convergence would
-    // give all 1s)
+    // give all 1s). Forest budget 2 keeps the chain whole for the
+    // global rounds.
     val pairs = (1L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
-    val (labels, rounds) = Dedup.dedupClustersWithRounds(pairs, maxIter = 1)
+    val (labels, rounds) = Dedup.dedupClustersWithRounds(pairs, 1, 2)
     assert(rounds === 1)
     val got = labels.as[(Long, Long)].collect().toMap
     assert(got.keySet === (1L to 12L).toSet)
     assert(got.forall { case (node, lbl) => lbl >= 1L && lbl <= node })
+  }
+
+  /** A 40-chain, an 8-clique, a 40-spoke star, a pair and a self-loop. */
+  private def mixedGraph: Seq[(Long, Long)] =
+    (100L until 139L).map(i => (i, i + 1)) ++
+      (for (a <- 200L to 207L; b <- a + 1 to 207L) yield (a, b)) ++
+      (301L to 340L).map(i => (300L, i)) ++
+      Seq((500L, 501L), (600L, 600L))
+
+  private def truth(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val nodes = pairs.flatMap { case (a, b) => Seq(a, b) }.distinct
+    var lbl = nodes.map(n => n -> n).toMap
+    var changed = true
+    while (changed) {
+      val next = pairs.foldLeft(lbl) { case (m, (a, b)) =>
+        val l = math.min(m(a), m(b))
+        m.updated(a, l).updated(b, l)
+      }
+      changed = next != lbl
+      lbl = next
+    }
+    lbl
+  }
+
+  private def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] = {
+    val rows = df.as[(Long, Long)].collect()
+    assert(rows.map(_._1).distinct.length === rows.length, "one label per node")
+    rows.toMap
+  }
+
+  test("one forest read whole is the answer: no global round") {
+    val pairs = mixedGraph.toDF("doc_a", "doc_b").repartition(1)
+    val (got, rounds) = Dedup.dedupClustersWithRounds(pairs)
+    assert(rounds === 0)
+    assert(labels(got) === truth(mixedGraph))
+  }
+
+  test("forest budgets of 1 and 3 entries give the default's labels") {
+    val pairs = mixedGraph.toDF("doc_a", "doc_b").repartition(1)
+    val default = labels(Dedup.dedupClusters(pairs))
+    assert(default === truth(mixedGraph))
+    for (budget <- Seq(1, 3)) {
+      val (got, rounds) = Dedup.dedupClustersWithRounds(pairs, 25, budget)
+      assert(rounds >= 1, s"budget $budget flushes, so the global rounds run")
+      assert(labels(got) === default, s"budget $budget")
+    }
+  }
+
+  test("pairs spread over 4 partitions give the one-partition labels") {
+    val pairs = mixedGraph.toDF("doc_a", "doc_b")
+    val one = labels(Dedup.dedupClusters(pairs.repartition(1)))
+    val (got, rounds) = Dedup.dedupClustersWithRounds(pairs.repartition(4))
+    assert(rounds >= 1, "four forests need the global rounds")
+    assert(labels(got) === one)
   }
 
   test("cluster size histogram: path(3) + edge(2) -> one size-3 and one size-2 cluster") {

@@ -1,6 +1,10 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 import graft.operators.{Dedup, Materialize}
 
@@ -21,13 +25,55 @@ class MaterializeSpec extends SparkSpec {
       m.queryExecution.executedPlan.toString.take(400))
   }
 
+  /** Jobs that `body` starts, counted by a listener. A marker job run
+    * after `body` drains the listener queue: events arrive in order, so
+    * once the marker's end is seen, every job of `body` has been seen. */
+  private def jobsOf(body: => Unit): Int = {
+    val marker = "materialize-spec-marker"
+    val started = new AtomicInteger
+    val markerEnded = new CountDownLatch(1)
+    @volatile var markerJob = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == marker) markerJob = e.jobId
+        else started.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) markerEnded.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerEnded.await(60, TimeUnit.SECONDS), "marker job never ended")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("default mode: the frame carries its measured row count, from one job") {
+    val df = spark.range(0, 1000, 1, 4).toDF("x").where($"x" % 7 === 0)
+    var counted: (org.apache.spark.sql.DataFrame, Long) = null
+    assert(jobsOf { counted = Materialize.counted(df) } === 1,
+      "materializing must run exactly one job")
+    val (m, n) = counted
+    assert(n === 143 && m.count() === 143)
+    val stats = m.queryExecution.optimizedPlan.stats
+    assert(stats.rowCount === Some(BigInt(143)))
+    // UnsafeRow bytes of one long column: 8 B null bitset + 8 B value
+    assert(stats.sizeInBytes === BigInt(143 * 16))
+  }
+
   test("spark.graft.checkpointDir: reliable checkpoint files are written " +
       "and the iterative operator still converges") {
     val dir = Files.createTempDirectory("graft-ckpt").toFile
     spark.conf.set(Materialize.ConfKey, dir.getAbsolutePath)
     try {
-      val m = Materialize.frame(Seq(1, 2, 3).toDF("x"))
+      val (m, n) = Materialize.counted(Seq(1, 2, 3).toDF("x"))
       assert(m.as[Int].collect().sorted === Array(1, 2, 3))
+      assert(n === 3)
+      assert(m.queryExecution.optimizedPlan.stats.rowCount === Some(BigInt(3)))
       def files(f: java.io.File): Seq[java.io.File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
       assert(files(dir).nonEmpty, "reliable mode must write checkpoint files")

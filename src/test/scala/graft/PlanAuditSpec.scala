@@ -913,6 +913,16 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
+  test("e4: no runtime bloom filter rescans documents for the tiny candidate level") {
+    // Materialize.frame plants the candidate level's measured size, so
+    // Spark's InjectRuntimeFilter no longer takes it for a >10 GB
+    // application side worth pruning with a bloom filter built from a
+    // second documents scan
+    val p = plan("e4_dedup_quality")
+    assert(!p.contains("bloom_filter_agg"), p.take(2000))
+    assert(!p.contains("might_contain"), p.take(2000))
+  }
+
   test("e5: yield funnel joins per-doc flags by id — no pairwise, one stack unpivot") {
     val p = plan("e5_yield_funnel")
     assertNoPairwiseJoins(p, "e5")
