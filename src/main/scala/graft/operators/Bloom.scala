@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -34,7 +34,7 @@ import graft.functions.Parity.pround
   */
 object Bloom {
 
-  import Dedup.{md5Long56, affinePerm}
+  import Dedup.affinePerm
 
   /** Bits in the filter (2^16 — 8 KiB as a real bitmap). */
   val BloomBits = 65536
@@ -42,7 +42,7 @@ object Bloom {
   /** Hash count (k): positions 0..k-1 per key. */
   val BloomK = 3
 
-  private def hExpr(keyCol: String) = md5Long56(s"cast($keyCol as string)")
+  private def hash(keyCol: String) = GraftColumns.md5Long56(col(keyCol).cast("string"))
 
   /** The k bloom positions over a column named `h`, as an array expr. */
   private def posArray: String =
@@ -51,7 +51,7 @@ object Bloom {
 
   /** Distinct bit positions set by the build side's keys. */
   def buildBits(build: DataFrame, keyCol: String): DataFrame =
-    build.select(expr(hExpr(keyCol)).as("h"))
+    build.select(hash(keyCol).as("h"))
       .select(explode(expr(posArray)).as("pos"))
       .distinct()
 
@@ -68,7 +68,7 @@ object Bloom {
                      probe: DataFrame, probeKey: String): DataFrame = {
     val bits = buildBits(build, buildKey).withColumn("bset", lit(1))
     val probeKeys = probe.select(col(probeKey).as("k")).distinct()
-      .select(col("k"), expr(hExpr("k")).as("h"))
+      .select(col("k"), hash("k").as("h"))
       .select(col("k"), expr(s"array_distinct($posArray)").as("ps"))
     // distinct already hash-partitioned the keys on k, and explode
     // preserves that, so the groupBy below reuses the partitioning —

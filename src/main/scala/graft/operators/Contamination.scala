@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -25,9 +25,9 @@ import graft.functions.Parity.pround
   */
 object Contamination {
 
-  import Dedup.{md5Long56, shingleHashRows}
+  import Dedup.shingleHashRows
 
-  private val pctExpr = s"${md5Long56("cast(doc_id as string)")} % 100"
+  private def pct = GraftColumns.md5Long56(col("doc_id").cast("string")) % 100
 
   /** Per-eval-doc contamination: distinct-shingle count, how many of
     * them occur anywhere in the train split, and the overlap ratio. */
@@ -41,8 +41,8 @@ object Contamination {
     * instead of re-shingling the corpus twice. */
   private[graft] def contaminationFromShingles(shingles: DataFrame,
       evalPct: Int): DataFrame = {
-    val evalSh = shingles.where(expr(pctExpr) >= 100 - evalPct)
-    val trainSh = shingles.where(expr(pctExpr) < 100 - evalPct)
+    val evalSh = shingles.where(pct >= 100 - evalPct)
+    val trainSh = shingles.where(pct < 100 - evalPct)
       .select("sh_h").distinct()
     val perDoc = evalSh.groupBy("doc_id").agg(count(lit(1)).as("n_shingles"))
     val hit = evalSh.join(trainSh, Seq("sh_h"), "left_semi")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftColumns, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
@@ -69,7 +69,7 @@ object Dedup {
     * md5 keeps it engine-portable. Collision odds ≈ 2^-56 per pair. */
   def shingleHashRows(docs: DataFrame): DataFrame =
     shingleRows(docs).select(col("doc_id"),
-      expr(md5Long56("sh")).as("sh_h"))
+      GraftColumns.md5Long56(col("sh")).as("sh_h"))
 
   /** G1: exact dedup on whitespace-normalized lowercased text; survivor =
     * min doc_id per group. */
@@ -82,20 +82,10 @@ object Dedup {
   /** Modulus for the per-band affine permutations: the largest prime below
     * 2^30, so `(2b+1) * (h % P) + B_b` stays far under 2^63 in BOTH engines
     * (DuckDB BIGINT multiply raises on overflow; Spark wraps silently). */
-  val MinhashP = 1000000007L
+  val MinhashP: Long = graft.plans.MinhashSig.P
 
   /** Offset mixer for the affine family (Knuth's 2^32 golden ratio). */
-  val MinhashMixer = 2654435761L
-
-  /** SQL fragment: 56-bit md5-prefix long of string column/expr `c` — the
-    * engine-portable hash (DuckDB mirror: ('0x'||substr(md5(c),1,14))::BIGINT).
-    * r20: emits the native [[graft.plans.Md5Long56]] expression (registered
-    * by GraftExtensions in every first-party session — Bench/Verify/
-    * ProfileQuery/specs), bit-identical to the former composed form
-    * `cast(conv(substr(md5(c), 1, 14), 16, 10) as bigint)` but with no
-    * per-row hex encode / substring / radix re-parse — this fragment is
-    * the per-shingle kernel of every corpus-scale dedup pass. */
-  def md5Long56(c: String): String = s"md5_long56($c)"
+  val MinhashMixer: Long = graft.plans.MinhashSig.Mixer
 
   /** SQL fragment: the j-th affine permutation of non-negative long `h`.
     * The per-band offset is XOR-mixed into `h` BEFORE the mod so two
@@ -167,35 +157,23 @@ object Dedup {
       .select("doc_id", "n_copies")
   }
 
-  /** G2a: banded MinHash signature. The shingle is md5-hashed ONCE
-    * (shingleHashRows), then each band applies a cheap affine permutation
-    * `(2b+1)·((h XOR off_b) mod P) + off_b mod P` — the classic
-    * one-strong-hash + k-universal-permutations MinHash construction.
-    * Compared to hashing `band:shingle` per band, this does `bands`×
-    * fewer md5 calls and never multiplies the row count before the
-    * aggregate: the `bands` mins are computed in ONE groupBy(doc_id) pass
-    * and unpivoted with `stack` afterwards (rows out = docs × bands, same
-    * schema as before). */
+  /** G2a: banded MinHash signature, (doc_id, band, minh) with one row per
+    * band of every document that has a 3-shingle. Each shingle is
+    * md5-hashed ONCE, then each band applies a cheap affine permutation
+    * `(2b+1)·((h XOR off_b) mod P) + off_b mod P` ([[affinePerm]]) and
+    * keeps its minimum — the classic one-strong-hash +
+    * k-universal-permutations MinHash construction. A document's
+    * signature depends only on its own text, so the whole computation is
+    * the native per-row [[graft.plans.MinhashSig]] byte pass, unpivoted
+    * by `posexplode`: one narrow projection over `docs`, with no shingle
+    * rows and no shuffle.
+    *
+    * Assumes `doc_id` is the key of `docs` (one row per id), as
+    * [[TextAnalysis.qualityScore]]'s token stats do; every fixture
+    * satisfies it. A duplicated id gives one signature per input row. */
   def minhashSignature(docs: DataFrame, bands: Int): DataFrame =
-    signatureFromShingles(shingleHashRows(docs), bands)
-
-  /** [[minhashSignature]]'s aggregate over an existing (doc_id, sh_h)
-    * shingle table — the from-parts entry the session-shared builds use
-    * ([[DedupQueries.sharedSignatures]] feeds from the materialized
-    * shingle table instead of re-shingling the corpus). min() over the
-    * shingle MULTISET equals min() over the distinct set, so feeding the
-    * distinct shared table is value-identical to the docs path. */
-  private[graft] def signatureFromShingles(shingles: DataFrame,
-      bands: Int): DataFrame = {
-    val mins = (0 until bands).map(b =>
-      min(expr(affinePerm(b, "sh_h"))).as(s"m$b"))
-    val stackArgs = (0 until bands).map(b => s"$b, m$b").mkString(", ")
-    shingles
-      .groupBy("doc_id")
-      .agg(mins.head, mins.tail: _*)
-      .select(col("doc_id"),
-        expr(s"stack($bands, $stackArgs)").as(Seq("band", "minh")))
-  }
+    docs.select(col("doc_id"),
+      posexplode(GraftColumns.minhashSig(col("text"), bands)).as(Seq("band", "minh")))
 
   /** G2c: INCREMENTAL near-dup — flag incoming docs that LSH-collide
     * with the EXISTING corpus's signature index, the nightly-ingest
@@ -450,7 +428,7 @@ object Dedup {
   def dedupRecallCensus(docs: DataFrame, clusters: DataFrame): DataFrame = {
     val lbl = docs
       .select(col("doc_id"),
-        expr(md5Long56("lower(trim(regexp_replace(text, '[ \\t\\n\\r\\f]+', ' ')))"))
+        GraftColumns.md5Long56(normText(col("text")))
           .as("g"))
       .join(clusters, Seq("doc_id"), "left")
       .select(col("g"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
@@ -1092,9 +1070,9 @@ object DedupQueries {
       .select(col("doc_b").as("doc_id")).distinct()
 
   /** Session-shared materialized DISTINCT (doc_id, sh_h) shingle table —
-    * the bottom of the shared-build ladder (shingles → signatures →
-    * candidates → clusters, plus the exact threshold join). Every
-    * shingle consumer (signature build, inverted-index joins g4/g15,
+    * the bottom of the shingle half of the shared-build ladder (the
+    * signature half, signatures → candidates → clusters, reads
+    * `documents` directly). Every shingle consumer (inverted-index joins g4/g15,
     * df census g19, contamination y3, dup-exposure y8, the prefix-
     * filtered exact join) reads this one stored table; at warehouse
     * scale it is THE persisted shingle index a pipeline maintains,
@@ -1105,16 +1083,16 @@ object DedupQueries {
     SharedBuild(s, d, "shingles")(Materialize.frame(
       shingleHashRows(docs(s, d)).distinct()))
 
-  /** Session-shared materialized 4-band minhash signature table, built
-    * from [[sharedShingles]] (min over the distinct shingle set equals
-    * min over the multiset, so this is value-identical to signing the
-    * raw shingle stream). Consumers: the candidate build (which e4, e5
-    * and g24 read), the bucket cap, the uncapped bucket census g21, the
-    * split incremental g13 (signatures are per-doc, so a doc-subset's
-    * table is a doc_id filter of this one) and g25's augmented table. */
+  /** Session-shared materialized 4-band minhash signature table: one
+    * narrow pass of [[Dedup.minhashSignature]] over `documents`, which
+    * never builds [[sharedShingles]]. Consumers: the candidate build
+    * (which e4, e5 and g24 read), the bucket cap, the uncapped bucket
+    * census g21, the split incremental g13 (signatures are per-doc, so a
+    * doc-subset's table is a doc_id filter of this one) and g25's
+    * augmented table. */
   private[graft] def sharedSignatures(s: SparkSession, d: String): DataFrame =
     SharedBuild(s, d, "signatures")(Materialize.frame(
-      signatureFromShingles(sharedShingles(s, d), 4)))
+      minhashSignature(docs(s, d), 4)))
 
   /** Session-shared materialized exact threshold-Jaccard pair table
     * (prefix-filtered All-Pairs join at t = 0.5 over [[sharedShingles]])

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -148,7 +148,7 @@ object Packing {
     val toks = docs
       .select(col("doc_id"), posexplode(expr(Dedup.tokensExpr)).as(Seq("pos0", "w")))
       .select(col("doc_id"), (col("pos0") + 1).as("pos"),
-        when(expr(s"${Dedup.md5Long56("w")} % $modulus") === 0, 1L)
+        when(GraftColumns.md5Long56(col("w")) % modulus === 0, 1L)
           .otherwise(0L).as("b"))
     // a boundary token BELONGS to the chunk it closes: count boundaries
     // strictly before each position
@@ -273,7 +273,7 @@ object Packing {
   def shardBalance(docs: DataFrame, nShards: Int = DefaultShards): DataFrame = {
     val per = docs
       .select(
-        expr(s"${Dedup.md5Long56("cast(doc_id as string)")} % $nShards")
+        (GraftColumns.md5Long56(col("doc_id").cast("string")) % nShards)
           .as("shard"),
         expr(s"size(${Dedup.tokensExpr})").cast("long").as("toks"))
       .groupBy("shard")
@@ -299,7 +299,7 @@ object Packing {
     * expectation comes from the |sources| count table. */
   def shuffleQuality(docs: DataFrame, nShards: Int = DefaultShards): DataFrame = {
     val keyed = docs.select(col("doc_id"), col("source"),
-        expr(Dedup.md5Long56("cast(doc_id as string)")).as("h"))
+        GraftColumns.md5Long56(col("doc_id").cast("string")).as("h"))
       .select(col("doc_id"), col("source"),
         (col("h") % nShards).as("shard"), expr(s"h div $nShards").as("r"))
     val w = Window.partitionBy("shard").orderBy(col("r"), col("doc_id"))

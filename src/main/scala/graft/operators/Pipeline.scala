@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -28,8 +28,6 @@ import graft.functions.Parity.pround
   * dedup, the metric joins on doc_id, and the census.
   */
 object Pipeline {
-
-  import Dedup.md5Long56
 
   /** Per-survivor metric rows: one row per unique normalized text that
     * passes every bar, carrying the metrics the bars were judged on.
@@ -154,17 +152,18 @@ object Pipeline {
   def curate(docs: DataFrame, minTokens: Int, vocabK: Int = 25,
              maxOov: Double = 0.2, minTtr: Double = 0.2,
              maxTopBigram: Double = 0.18,
-             materialize: Boolean = true): DataFrame =
+             materialize: Boolean = true): DataFrame = {
+    val decile = GraftColumns.md5Long56(col("doc_id").cast("string")) % 10
     curateSurvivors(docs, minTokens, vocabK, maxOov, minTtr, maxTopBigram,
         materialize)
       .withColumn("split",
-        when(expr(s"${md5Long56("cast(doc_id as string)")} % 10") < 8, lit("train"))
-          .when(expr(s"${md5Long56("cast(doc_id as string)")} % 10") === 8, lit("val"))
+        when(decile < 8, lit("train")).when(decile === 8, lit("val"))
           .otherwise(lit("test")))
       .groupBy("split", "lang")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_toks")).as("tok_sum"),
         sum(col("n_copies") - 1L).as("dups_removed"))
+  }
 }
 
 object MultiModalPipeline {
@@ -184,14 +183,18 @@ object MultiModalPipeline {
     val keep = Similarity.semDedup(vecs, nCents, minCos)
       .where(col("kept") === 1)
       .select(col("vec_id").as("doc_id"))
-    val textOk = TextAnalysis.qualityScore(docs)
-      .where(col("n_tokens") >= minTokens)
-      .select(col("doc_id"), col("n_tokens"))
+    val toks = TextAnalysis.qualityScore(docs).select(col("doc_id"), col("n_tokens"))
+    // the token floor is applied inside the aggregate: a filter on
+    // n_tokens would be pushed below qualityScore's projection as a
+    // second gopher_stats call per row
+    val textOk = col("n_tokens") >= minTokens
     docs.select(col("doc_id"), col("lang"))
-      .join(textOk, Seq("doc_id"))
+      .join(toks, Seq("doc_id"))
       .join(keep, Seq("doc_id"))
       .groupBy("lang")
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("tok_sum"))
+      .agg(count(when(textOk, 1)).as("n_docs"),
+        sum(when(textOk, col("n_tokens"))).as("tok_sum"))
+      .where(col("n_docs") > 0)
   }
 }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{Q, Tables}
@@ -31,7 +31,7 @@ object Sketch {
   private[graft] def tokenCounts(docs: DataFrame): DataFrame =
     docs.select(explode(expr(Dedup.tokensExpr)).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n"))
-      .withColumn("h", expr(Dedup.md5Long56("word")))
+      .withColumn("h", GraftColumns.md5Long56(col("word")))
 
   private def positioned(counts: DataFrame, depth: Int, width: Int): DataFrame = {
     val rows = (0 until depth).map(j =>

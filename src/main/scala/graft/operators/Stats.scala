@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumns, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -39,7 +39,6 @@ import graft.functions.Parity.pround
   */
 object Stats {
 
-  import Dedup.md5Long56
 
   /** HLL-style distinct-word estimate with m=64 registers.
     *
@@ -52,7 +51,7 @@ object Stats {
   def hllDistinctWords(docs: DataFrame): DataFrame = {
     val words = docs.select(explode(expr(Dedup.tokensExpr)).as("w")).distinct()
     val regs = words
-      .select(expr(md5Long56("w")).as("h"))
+      .select(GraftColumns.md5Long56(col("w")).as("h"))
       .select((col("h") % 64).as("j"), expr("h div 64").as("r"))
       .select(col("j"),
         expr("1 + size(filter(sequence(1, 50), k -> r % shiftleft(cast(1 as bigint), k) = 0))")
@@ -93,7 +92,7 @@ object Stats {
     val vals = df.select(col(groupCol).as("g"),
       col(valueCol).cast("string").as("v")).distinct()
     val regs = vals
-      .select(col("g"), expr(md5Long56("v")).as("h"))
+      .select(col("g"), GraftColumns.md5Long56(col("v")).as("h"))
       .select(col("g"), (col("h") % 64).as("j"), expr("h div 64").as("r"))
       .select(col("g"), col("j"),
         expr("1 + size(filter(sequence(1, 50), k -> r % shiftleft(cast(1 as bigint), k) = 0))")
@@ -657,7 +656,7 @@ object Stats {
     val vals = df.select(col(groupCol).as("g"),
       col(valueCol).cast("string").as("v")).distinct()
     val regs = vals
-      .select(col("g"), expr(Dedup.md5Long56("v")).as("h"))
+      .select(col("g"), GraftColumns.md5Long56(col("v")).as("h"))
       .select(col("g"), (col("h") % 64).as("j"), expr("h div 64").as("r"))
       .select(col("g"), col("j"),
         expr("1 + size(filter(sequence(1, 50), k -> r % shiftleft(cast(1 as bigint), k) = 0))")
@@ -1021,7 +1020,8 @@ object Stats {
       .select(col("day"), col("rev"),
         explode(expr(s"sequence(0, ${nPerms - 1})")).as("p"))
       .select(col("p"), col("rev"),
-        (expr(Dedup.md5Long56("concat(cast(day as string), ':', cast(p as string))")) % 2)
+        (GraftColumns.md5Long56(
+          concat(col("day").cast("string"), lit(":"), col("p").cast("string"))) % 2)
           .as("pg"))
       .groupBy("p").agg(
         sum(when(col("pg") === 1, col("rev"))).as("s1"),
@@ -1094,7 +1094,8 @@ object Stats {
       .select(col("et"), col("day"), col("rev"),
         explode(expr(s"sequence(0, ${nPerms - 1})")).as("p"))
       .select(col("et"), col("p"), col("rev"),
-        (expr(Dedup.md5Long56("concat(cast(day as string), ':', cast(p as string))")) % 2)
+        (GraftColumns.md5Long56(
+          concat(col("day").cast("string"), lit(":"), col("p").cast("string"))) % 2)
           .as("pg"))
       .groupBy("et", "p")
       .agg(sum(when(col("pg") === 1, col("rev"))).as("s1"),

@@ -561,7 +561,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("source"),
         explode(expr(bigramsFromToks)).as("g"))
       .select(col("doc_id"), col("source"),
-        (expr(Dedup.md5Long56("g")) % buckets).as("b"))
+        (GraftColumns.md5Long56(col("g")) % buckets).as("b"))
     val lm = bg.groupBy("b").agg(
       count(lit(1)).as("cr"),
       sum(when(col("source") === targetSource, 1L).otherwise(0L)).as("ct"))
@@ -636,7 +636,7 @@ object TextAnalysis {
   def winnowFingerprints(docs: DataFrame, w: Int = 4): DataFrame = {
     val sh = Dedup.shinglePosRows(docs)
       .select(col("doc_id"), col("pos"),
-        expr(Dedup.md5Long56("sh")).as("h"))
+        GraftColumns.md5Long56(col("sh")).as("h"))
     val win = Window.partitionBy("doc_id").orderBy("pos")
       .rowsBetween(Window.currentRow, w - 1)
     val doc = Window.partitionBy("doc_id")
@@ -1400,7 +1400,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("source"), explode(expr(tokensExpr)).as("w"))
       .groupBy(col("doc_id"), col("source"))
       .agg(count(lit(1)).as("toks"),
-        sum(when(expr(s"${Dedup.md5Long56("w")} % 5") === 0, 1L)
+        sum(when(GraftColumns.md5Long56(col("w")) % 5 === 0, 1L)
           .otherwise(0L)).as("hits"))
     docs.select(col("doc_id"), col("source"))
       .join(per, Seq("doc_id", "source"), "left_outer")

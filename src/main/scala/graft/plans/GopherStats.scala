@@ -90,7 +90,8 @@ object GopherStats {
   private val StopBytes: Array[Array[Byte]] =
     Stopwords.map(_.getBytes(java.nio.charset.StandardCharsets.US_ASCII)).toArray
 
-  @inline private def isDelim(b: Byte): Boolean =
+  /** The whitespace token delimiters `[ \t\n\r\f]` (also MinhashSig's). */
+  @inline private[plans] def isDelim(b: Byte): Boolean =
     b == ' ' || b == '\t' || b == '\n' || b == '\r' || b == '\f'
 
   private def isStop(s: UTF8String, start: Int, end: Int): Boolean = {

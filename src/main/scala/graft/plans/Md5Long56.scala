@@ -55,8 +55,15 @@ object Md5Long56 {
 
   /** First 7 md5 digest bytes of the UTF-8 encoding, big-endian. */
   def hash(s: UTF8String): Long = {
+    val b = s.getBytes
+    hash(b, b.length)
+  }
+
+  /** [[hash]] of the first `len` bytes of `bytes`. */
+  def hash(bytes: Array[Byte], len: Int): Long = {
     val d = md.get()
-    val b = d.digest(s.getBytes)
+    d.update(bytes, 0, len)
+    val b = d.digest()
     ((b(0) & 0xffL) << 48) | ((b(1) & 0xffL) << 40) |
       ((b(2) & 0xffL) << 32) | ((b(3) & 0xffL) << 24) |
       ((b(4) & 0xffL) << 16) | ((b(5) & 0xffL) << 8) | (b(6) & 0xffL)

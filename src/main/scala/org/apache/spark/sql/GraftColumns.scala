@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.classic.ExpressionUtils
 
-import _root_.graft.plans.GopherStats
+import _root_.graft.plans.{GopherStats, Md5Long56, MinhashSig}
 
 /** Column factories for graft's native Catalyst expressions.
   *
@@ -14,8 +14,17 @@ import _root_.graft.plans.GopherStats
   * to it.
   */
 object GraftColumns {
+  import ExpressionUtils.{column, expression}
 
   /** `gopher_stats(text)`: see [[GopherStats]]. */
-  def gopherStats(text: Column): Column =
-    ExpressionUtils.column(GopherStats(ExpressionUtils.expression(text)))
+  def gopherStats(text: Column): Column = column(GopherStats(expression(text)))
+
+  /** `md5_long56(c)`, the engine-portable 56-bit md5 prefix of a string:
+    * see [[Md5Long56]]. */
+  def md5Long56(c: Column): Column = column(Md5Long56(expression(c)))
+
+  /** `minhash_sig(text, bands)`, a document's banded MinHash signature:
+    * see [[MinhashSig]]. */
+  def minhashSig(text: Column, bands: Int): Column =
+    column(MinhashSig(expression(text), bands))
 }

@@ -25,7 +25,7 @@ class DedupCacheSpec extends SparkSpec {
     DedupQueries.sharedCandidates(s1, dir).count()
     val perSession = total - before
     // the layered build populates the whole ladder below candidates
-    // (shingles, signatures, candidates at minimum)
+    // (signatures, the bucket cap and candidates)
     assert(perSession >= 3, SharedBuild.levelCounts.toString)
 
     // a second session gets its own entries (keyed by (session, dir))
@@ -65,6 +65,28 @@ class DedupCacheSpec extends SparkSpec {
       run(n)
       assert(SharedBuild.levelCounts === built, n)
     }
+  }
+
+  test("curation's query order builds the signature half of the ladder, never the shingle table") {
+    val dir = sf("sf0.001")
+    SharedBuild.evictStopped(_ => true)
+    val s = spark.newSession()
+    def run(name: String): Unit =
+      Registry.all.find(_.name == name).get.run(s, dir).collect()
+    // the curation workload's queries, in the order it runs them
+    Seq("g17_cluster_sizes", "g6_dedup_clusters", "g2_minhash_sig",
+      "g2_minhash_pairs", "e4_dedup_quality", "e5_yield_funnel", "t1_langid",
+      "t2_quality").foreach(run)
+    val built = SharedBuild.levelCounts
+    Seq("signatures", "cap:bucket", "candidates", "clusters").foreach { l =>
+      assert(built.get(l) === Some(1), s"$l: $built")
+    }
+    assert(!built.contains("shingles"), built.toString)
+    // a shingle reader still builds the shingle level, once per session
+    run("g4_ngram_jaccard")
+    run("g4_ngram_jaccard")
+    assert(SharedBuild.levelCounts.get("shingles") === Some(1),
+      SharedBuild.levelCounts.toString)
   }
 
   test("newSession-per-request on one LIVE context stays bounded (ADVICE r13)") {

@@ -301,4 +301,11 @@ class DedupSpec extends SparkSpec {
     // the 10 rare pairs — the 4950-pair hot tail is gone
     assert(Dedup.ngramCandidates(sh, Some(cap)).count() === 10L)
   }
+
+  test("x1 and g2_minhash_sig run on a session built without spark.sql.extensions") {
+    // md5_long56 and minhash_sig are built as Columns, not looked up by
+    // name: a Sampling query and Dedup.minhashSignature (the signature
+    // level g2_minhash_sig returns) need no GraftExtensions
+    assertPlainSessionParity(sf("sf0.001"), Seq("x1_hash_sample", "g2_minhash_sig"))
+  }
 }

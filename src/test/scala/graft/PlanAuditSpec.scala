@@ -83,9 +83,28 @@ class PlanAuditSpec extends SparkSpec {
     val df = operators.Dedup.minhashCandidates(
       Tables.documents(spark, sf("sf0.001")), 4)
     val p = df.queryExecution.executedPlan.toString
-    // full pipeline visible: stack unpivot of the per-band mins, no
-    // cartesian anywhere, and the bucket-df cap survives optimization
-    assert(p.contains("Generate stack") || p.contains("stack("), p.take(800))
+    // full pipeline visible: every signature branch is ONE native
+    // minhash_sig per documents row, unpivoted by posexplode, with no
+    // Exchange between the documents scan and the signature rows (the
+    // per-doc signature needs no shingle rows and no doc_id groupBy);
+    // no cartesian anywhere, and the bucket-df cap survives optimization
+    val gens = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.inputPlan.collect { case g: org.apache.spark.sql.execution.GenerateExec => g }
+      case other => fail(s"expected an adaptive plan\n$other")
+    }
+    assert(gens.nonEmpty, p.take(1200))
+    gens.foreach { g =>
+      val sig = g.generator.collect { case m: graft.plans.MinhashSig => m }
+      assert(sig.size === 1 && g.generator.prettyName === "posexplode", g.toString)
+      assert(g.collect {
+        case e: org.apache.spark.sql.execution.exchange.Exchange => e }.isEmpty,
+        g.treeString)
+      assert(g.collect {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s }.size === 1,
+        g.treeString)
+    }
+    assert(p.linesIterator.count(_.contains("minhash_sig(")) === gens.size, p.take(2000))
     assert(!p.contains("CartesianProduct"))
     // the bucket-df cap must survive optimization — since r16 it is the
     // DERIVED cap column (the histogram's `<= ceiling` literal alone
@@ -901,6 +920,13 @@ class PlanAuditSpec extends SparkSpec {
       assert(!p.contains("Generate"), s"$n\n" + p.take(1200))
       assert(!p.contains("Exchange hashpartitioning(doc_id"), s"$n\n" + p.take(1200))
     }
+  }
+
+  test("e3: one gopher_stats per documents row — the token floor is not pushed into a filter") {
+    val p = plan("e3_joint_curation")
+    val gs = p.linesIterator.filter(_.contains("gopher_stats(")).toSeq
+    assert(gs.size === 1 && gs.head.trim.matches("[*(0-9) +:|-]*Project .*"),
+      p.take(2000))
   }
 
   test("e4/e5/g24 read the shared candidate level — no (band, minh) join of their own") {

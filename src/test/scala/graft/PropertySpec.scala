@@ -237,6 +237,59 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  // per-doc text: null, empty, whitespace-only, and lines of words (often
+  // fewer than 3) over the five delimiters, whitespace that must NOT
+  // split (\x0B, NBSP, NEL, LINE SEPARATOR) and multi-byte characters
+  private val unicodeText: Gen[Option[String]] = {
+    val sep = Gen.oneOf(" ", "\t", "\n", "\r", "\f", "\u000B", "\u00A0",
+      "\u0085", "\u2028", "  \t ")
+    val word = Gen.oneOf(Gen.alphaNumStr.map(_.take(6)),
+      Gen.oneOf("é", "中", "😀", "naïve", "The", "the", "OF", "of", "a", "A"))
+    val line = Gen.listOf(Gen.oneOf(word, sep)).map(_.mkString)
+    Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some("")),
+      1 -> Gen.oneOf(" ", "\t\n", " \r\f ").map(Some(_)), 6 -> line.map(Some(_)))
+  }
+
+  // one line of invalid UTF-8 as a SQL expression: five tokens, three of
+  // them with a bare continuation byte 0x80 or a truncated sequence
+  private val invalidUtf8Text =
+    "cast(X'2061C3206280FF09E4B8AD0CE4B82063800B64' AS string)"
+
+  test("minhash_sig equals the exploded-shingle md5 + per-band min + stack unpivot on arbitrary unicode text") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions._
+    import operators.Dedup
+    // the signature as it was computed before the minhash_sig byte pass,
+    // kept as the reference: md5_long56 of every exploded 3-shingle, the
+    // per-band min of its affine permutation grouped by doc, unpivoted
+    def refSig(docs: DataFrame, bands: Int): DataFrame = {
+      val mins = (0 until bands).map(b =>
+        min(expr(Dedup.affinePerm(b, "sh_h"))).as(s"m$b"))
+      val stackArgs = (0 until bands).map(b => s"$b, m$b").mkString(", ")
+      Dedup.shingleHashRows(docs)
+        .groupBy("doc_id").agg(mins.head, mins.tail: _*)
+        .select(col("doc_id"),
+          expr(s"stack($bands, $stackArgs)").as(Seq("band", "minh")))
+    }
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
+    val invalid = spark.sql(s"SELECT -1L AS doc_id, $invalidUtf8Text AS text")
+    forAllSamples(Gen.nonEmptyListOf(unicodeText), n = 8) { ts =>
+      val docs = ts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("doc_id", "text").union(invalid)
+      // docs with fewer than 3 tokens (null, empty, whitespace-only,
+      // short lines) have no signature rows
+      val signed = ts.zipWithIndex.collect {
+        case (Some(t), i) if t.split("[ \t\n\r\f]+").count(_.nonEmpty) >= 3 => i.toLong
+      }.toSet + -1L
+      Seq(1, 4).foreach { bands =>
+        val got = Dedup.minhashSignature(docs, bands)
+        assert(got.select("doc_id").distinct().as[Long].collect().toSet === signed)
+        assert(rows(got) === rows(refSig(docs, bands)), s"bands=$bands")
+      }
+    }
+  }
+
   test("langId and qualityScore match the explode + groupBy token stats on arbitrary unicode text") {
     import spark.implicits._
     import org.apache.spark.sql.DataFrame
@@ -270,18 +323,8 @@ class PropertySpec extends SparkSpec {
           .as("quality"))
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
 
-    val sep = Gen.oneOf(" ", "\t", "\n", "\r", "\f", "\u000B", "\u00A0",
-      "\u0085", "\u2028", "  \t ")
-    val word = Gen.oneOf(Gen.alphaNumStr.map(_.take(6)),
-      Gen.oneOf("é", "中", "😀", "naïve", "The", "the", "OF", "of", "a", "A"))
-    val line = Gen.listOf(Gen.oneOf(word, sep)).map(_.mkString)
-    val text = Gen.frequency(1 -> Gen.const(None), 1 -> Gen.const(Some("")),
-      1 -> Gen.oneOf(" ", "\t\n", " \r\f ").map(Some(_)), 6 -> line.map(Some(_)))
-    val doc = Gen.zip(text, Gen.oneOf("en", "fr"))
-    // one line of invalid UTF-8 (id -1): five tokens, three of them with a
-    // bare continuation byte 0x80 or a truncated sequence
-    val invalid = spark.sql("SELECT -1L AS doc_id, " +
-      "cast(X'2061C3206280FF09E4B8AD0CE4B82063800B64' AS string) AS text, " +
+    val doc = Gen.zip(unicodeText, Gen.oneOf("en", "fr"))
+    val invalid = spark.sql(s"SELECT -1L AS doc_id, $invalidUtf8Text AS text, " +
       "'en' AS lang, 17L AS n_chars")
     forAllSamples(Gen.nonEmptyListOf(doc), n = 8) { ds =>
       val docs = ds.zipWithIndex

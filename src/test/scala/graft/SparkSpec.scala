@@ -23,6 +23,43 @@ trait SparkSpec extends AnyFunSuite {
       .!(scala.sys.process.ProcessLogger(l => log.append(l).append('\n')))
     assert(code === 0, log.takeRight(3000).toString)
   }
+
+  /** Runs the named registered queries over `dir` on a session built
+    * without `spark.sql.extensions` ([[PlainSessionQueries]], in a child
+    * JVM) and asserts each gives this session's rows. */
+  def assertPlainSessionParity(dir: String, names: Seq[String]): Unit = {
+    val out = java.nio.file.Files.createTempDirectory("plain_session").toString
+    runInChildJvm(PlainSessionQueries, Seq(dir, out) ++ names: _*)
+    names.foreach { n =>
+      val want = Registry.all.find(_.name == n).get.run(spark, dir)
+        .toJSON.collect().sorted.toList
+      val got = spark.read.text(s"$out/$n").collect().map(_.getString(0)).sorted.toList
+      assert(got.nonEmpty && got === want, n)
+    }
+  }
+}
+
+/** Child-JVM half of [[SparkSpec.assertPlainSessionParity]]: runs the
+  * named registered queries on a SparkSession with no extensions and
+  * writes each result as JSON lines to `<outDir>/<name>`.
+  * Args: sfDir, outDir, query names. */
+object PlainSessionQueries {
+  def main(args: Array[String]): Unit = {
+    val spark = SparkSession.builder().master("local[2]")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.shuffle.partitions", "2")
+      .getOrCreate()
+    try {
+      require(!spark.sparkContext.getConf.contains("spark.sql.extensions"))
+      Seq("gopher_stats", "md5_long56").foreach { f =>
+        require(!spark.catalog.functionExists(f), s"GraftExtensions loaded: $f")
+      }
+      args.drop(2).foreach { name =>
+        Registry.all.find(_.name == name).get.run(spark, args(0))
+          .toJSON.write.text(s"${args(1)}/$name")
+      }
+    } finally spark.stop()
+  }
 }
 
 object SparkSpec {

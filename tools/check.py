@@ -3,11 +3,15 @@
 
 Usage:
   sbt -batch "runMain graft.Verify /root/testdata/sf0.01 /tmp/verify_out"
-  python3 tools/check.py /root/testdata/sf0.01 /tmp/verify_out [query ...]
+  python3 tools/check.py [-j N] /root/testdata/sf0.01 /tmp/verify_out [query ...]
 
 For each query in oracle_sql.json: registers every testdata table as a
 DuckDB view, runs the oracle SQL, loads the Spark parquet result, sorts
 columns by name (like the driver), then compares row/schema/values.
+Each result line ends with the oracle's seconds. `-j N` runs the
+oracles in N worker processes, each with its own DuckDB connection, so
+one slow oracle (g31's takes minutes at sf0.01) overlaps the others;
+lines then print in completion order.
 
 Performance-drift mode:
   python3 tools/check.py --drift [--scale sf1] <bench.json> [more ...]
@@ -37,7 +41,7 @@ item 1). Same drift rule at both scales; sf1 additionally tolerates
 the documented output-bound super-linear families (the baseline values
 already embed their F^2/F^3 pair mass, so the 1.5x rule transfers).
 """
-import sys, os, json, glob
+import sys, os, json, glob, time
 import duckdb
 import pandas as pd
 import numpy as np
@@ -222,39 +226,75 @@ def drift(bench_paths):
     print(f"\n{len(common)} compared, {len(flags)} drift flag(s){note}")
     sys.exit(1 if flags else 0)
 
-def main():
-    if sys.argv[1] == "--drift":
-        drift(sys.argv[2:])
-        return
-    sf_dir, out_dir = sys.argv[1], sys.argv[2]
-    only = set(sys.argv[3:])
+def connect(sf_dir):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+def check_one(con, out_dir, name, sql):
+    """-> (ok, result line) for one query; the line carries the oracle's
+    seconds."""
+    files = glob.glob(f"{out_dir}/{name}/*.parquet")
+    if not files:
+        return False, f"[FAIL] {name}: no spark output"
+    try:
+        spark_df = pd.concat([pd.read_parquet(f) for f in files])
+        t0 = time.monotonic()
+        oracle_df = con.execute(sql).df()
+    except Exception as e:
+        return False, f"[FAIL] {name}: {e}"
+    secs = time.monotonic() - t0
+    err = compare(name, spark_df, oracle_df)
+    if err:
+        return False, f"[FAIL] {name}: {err} ({secs:.2f} s)"
+    return True, f"[ ok ] {name} ({len(spark_df)} rows, {secs:.2f} s)"
+
+_worker_con = None
+
+def _worker_init(sf_dir):
+    global _worker_con
+    _worker_con = connect(sf_dir)
+
+def _worker_check(job):
+    return check_one(_worker_con, *job)
+
+def main():
+    if sys.argv[1] == "--drift":
+        drift(sys.argv[2:])
+        return
+    args = sys.argv[1:]
+    jobs = 1
+    if "-j" in args:
+        i = args.index("-j")
+        jobs = int(args[i + 1])
+        args = args[:i] + args[i + 2:]
+    sf_dir, out_dir = args[0], args[1]
+    only = set(args[2:])
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     unknown = only - set(oracle)
     if unknown:
         print(f"[FAIL] unknown query name(s): {sorted(unknown)}")
         sys.exit(1)
+    todo = [(out_dir, name, sql) for name, sql in sorted(oracle.items())
+            if not only or name in only]
+    if jobs > 1:
+        import multiprocessing
+        pool = multiprocessing.Pool(jobs, _worker_init, (sf_dir,))
+        results = pool.imap_unordered(_worker_check, todo)
+    else:
+        con = connect(sf_dir)
+        results = (check_one(con, *job) for job in todo)
     n_ok = n_bad = 0
-    for name, sql in sorted(oracle.items()):
-        if only and name not in only:
-            continue
-        files = glob.glob(f"{out_dir}/{name}/*.parquet")
-        if not files:
-            print(f"[FAIL] {name}: no spark output"); n_bad += 1; continue
-        try:
-            spark_df = pd.concat([pd.read_parquet(f) for f in files])
-            oracle_df = con.execute(sql).df()
-        except Exception as e:
-            print(f"[FAIL] {name}: {e}"); n_bad += 1; continue
-        err = compare(name, spark_df, oracle_df)
-        if err:
-            print(f"[FAIL] {name}: {err}"); n_bad += 1
-        else:
-            print(f"[ ok ] {name} ({len(spark_df)} rows)"); n_ok += 1
+    for ok, line in results:
+        print(line, flush=True)
+        n_ok += ok
+        n_bad += not ok
+    if jobs > 1:
+        pool.close()
+        pool.join()
     print(f"\n{n_ok} ok, {n_bad} fail")
     sys.exit(1 if n_bad else 0)
 

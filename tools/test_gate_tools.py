@@ -149,5 +149,46 @@ with tempfile.TemporaryDirectory() as tmp:
     check("driver-tail reparse ignores additive keys",
           times == {"qa": 3.0, "qb": 2.0} and sent is None, str(times))
 
+# 6. oracle compare: `-j N` runs the oracles in N worker processes with
+#    the same verdicts as a serial run, and every result line carries the
+#    oracle's seconds
+import re
+import pandas as pd
+with tempfile.TemporaryDirectory() as tmp:
+    sf_dir, out_dir = os.path.join(tmp, "sf"), os.path.join(tmp, "out")
+    os.makedirs(sf_dir)
+    pd.DataFrame({"doc_id": [1, 2, 3], "lang": ["en", "en", "fr"]}).to_parquet(
+        os.path.join(sf_dir, "documents.parquet"))
+    oracles = {
+        "qa_ok": "SELECT lang, count(*) AS n FROM documents GROUP BY lang",
+        "qb_wrong": "SELECT max(doc_id) AS m FROM documents",
+        "qc_ok": "SELECT doc_id FROM documents WHERE lang = 'en'",
+        "qd_missing": "SELECT 1 AS x"}
+    spark = {"qa_ok": pd.DataFrame({"lang": ["fr", "en"], "n": [1, 2]}),
+             "qb_wrong": pd.DataFrame({"m": [2]}),
+             "qc_ok": pd.DataFrame({"doc_id": [2, 1]})}
+    os.makedirs(out_dir)
+    with open(os.path.join(out_dir, "oracle_sql.json"), "w") as f:
+        json.dump(oracles, f)
+    for name, df in spark.items():
+        os.makedirs(os.path.join(out_dir, name))
+        df.to_parquet(os.path.join(out_dir, name, "part-0.parquet"))
+    def verdicts(*flags):
+        r = subprocess.run([sys.executable, os.path.join(HERE, "check.py"),
+                            *flags, sf_dir, out_dir], capture_output=True, text=True)
+        lines = [l for l in r.stdout.splitlines() if l.startswith("[")]
+        return r.returncode, lines, r.stdout + r.stderr
+    rc1, serial, out1 = verdicts()
+    rc2, par, out2 = verdicts("-j", "2")
+    strip = lambda ls: sorted(re.sub(r"[ (]*[0-9.]+ s\)$", "", l) for l in ls)
+    check("check.py serial verdicts", rc1 == 1 and len(serial) == 4
+          and sum(l.startswith("[ ok ]") for l in serial) == 2
+          and "2 ok, 2 fail" in out1, out1[-400:])
+    check("check.py -j 2 gives the serial verdicts", rc2 == 1
+          and strip(par) == strip(serial) and "2 ok, 2 fail" in out2, out2[-400:])
+    check("check.py prints each oracle's seconds",
+          all(re.search(r"[0-9]+\.[0-9]{2} s\)$", l) for l in serial + par
+              if "no spark output" not in l), "\n".join(serial + par))
+
 print(f"\n{'ALL OK' if not fails else 'FAILURES: ' + str(fails)}")
 sys.exit(1 if fails else 0)
