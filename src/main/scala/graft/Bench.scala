@@ -28,7 +28,8 @@ object Bench {
       val spark = ckptDir.fold(b)(d => b.config(Materialize.ConfKey, d))
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
-      // Untimed warmup: JIT + codegen + parquet footer/file-index caches,
+      // Untimed warmup: JIT + codegen + the four big tables' schemas in
+      // Tables' JVM-wide memo (and their files in the OS page cache),
       // so the first measured query isn't charged for start-up.
       spark.range(1000000L).selectExpr("sum(id)").collect()
       Seq("documents", "events", "lineitem", "embeddings")

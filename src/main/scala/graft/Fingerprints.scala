@@ -24,17 +24,25 @@ object Fingerprints {
 
   val GoldenPath = "PLAN_FINGERPRINTS.json"
 
-  def normalize(p: String): String = p
+  def normalize(p: String): String = maskSessionNames(p)
     .replaceAll("#\\d+", "#")
     .replaceAll("plan_id=\\d+", "plan_id=N")
     .replaceAll("MapPartitionsRDD\\[\\d+\\]", "MapPartitionsRDD[N]")
     .replaceAll("InMemoryFileIndex\\([^)]*\\)\\[[^\\]]*\\]",
       "InMemoryFileIndex[...]")
     .replaceAll("\\[file:[^\\]]*\\]", "[file:...]")
-    .replaceAll("graft_b_([a-z]+)_[0-9a-f]+", "graft_b_$1")
     // the Materialize call-site line number moves on unrelated edits
     .replaceAll("at (localCheckpoint|checkpoint) at [A-Za-z]+\\.scala:\\d+",
       "at $1")
+
+  /** Masks the names a plan string gets from its JVM and session rather
+    * than from its shape; PLANS.md applies this alone, so its plans keep
+    * their expr ids. */
+  def maskSessionNames(p: String): String = p
+    // per-session bucketed-table suffixes: graft_b_basket_69e36c38
+    .replaceAll("graft_b_([a-z]+)_[0-9a-f]+", "graft_b_$1")
+    // their per-JVM temp dirs: /tmp/graft_buckets_1522690699906582053
+    .replaceAll("graft_buckets_\\d+", "graft_buckets_N")
     // JVM-assigned lambda class names + identity hashes (the
     // mapPartitions decode seam): Lambda$5738/0x00007f1b...@77065121
     .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+(@[0-9a-f]+)?", "Lambda")

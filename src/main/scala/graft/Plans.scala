@@ -15,6 +15,13 @@ import org.apache.spark.sql.execution.ExplainMode
   */
 object Plans {
 
+  /** Fails when a pick name repeats: two picks of one query would dump
+    * its plan twice under notes that can disagree. */
+  private[graft] def requireDistinct(names: Seq[String]): Unit = {
+    val repeated = names.diff(names.distinct).distinct
+    require(repeated.isEmpty, s"repeated pick names: ${repeated.mkString(", ")}")
+  }
+
   private val picks: Seq[(String, String)] = Seq(
     "w1_wordcount" ->
       ("The reference's one distributed query. Scan pruned to `text` → " +
@@ -145,10 +152,8 @@ object Plans {
         "a codegen'd per-row fold — the corpus is touched exactly once, " +
         "by the (word, freq) reduce."),
     "y7_cdc_chunks" ->
-      ("Content-defined chunking: the boundary flag is computed in the " +
-        "scan projection, the running boundary count is a per-doc " +
-        "window (bounded partitions, the audited a2/a4 class), and the " +
-        "chunk census is a map-side-combinable aggregate."),
+      ("Content-defined chunking: one Generate + one per-doc window over " +
+        "a single doc_id exchange; no join anywhere."),
     "e2_embed_census" ->
       ("Embedding-side composition: broadcast centroid assignment, " +
         "centroid_id-keyed semantic-dedup verify, vec_id-keyed " +
@@ -328,9 +333,8 @@ object Plans {
         "exploded postings; df and corpus stats broadcast back; final " +
         "top-20 is TakeOrderedAndProject, not a global sort."),
     "t21_dsir_weights" ->
-      ("DSIR: hashed-bigram LM is ONE conditional-count pass over a " +
-        "4096-bounded bucket space, broadcast to the per-doc scorer; " +
-        "per-doc reduce is map-side combinable."),
+      ("DSIR importance weights: per-doc and per-bucket reductions join " +
+        "by id; the corpus-total denominator is the one 1-row cross."),
     "x25_gini" ->
       ("Gini: per-user totals partial-aggregate; the global " +
         "cumulative window runs over the unit-binned value domain, " +
@@ -398,11 +402,10 @@ object Plans {
         "and the disjunctive pair predicate is a post-join filter, " +
         "never a join condition that would force a nested loop."),
     "m9_phash_neardup" ->
-      ("Banded Hamming join: both sides are the same 4-rows-per-record " +
-        "band explode, candidates come from an EQUALITY join on " +
-        "(band_idx, band_val) — no BroadcastNestedLoopJoin or cartesian " +
-        "product anywhere; verify is a codegen'd bit_count filter after " +
-        "the pair dedup."),
+      ("Perceptual-hash near-dup: band explode then an EQUI-join on the " +
+        "(band, value) bucket — pigeonhole makes the prune lossless for " +
+        "hamming≤3, and the bit_count verify is the join condition, " +
+        "before the pair dedup; never an all-pairs product."),
     "t31_pmi_collocations" ->
       ("PMI: the bigram explode reduces to the observed-bigram table " +
         "before any join (partial+final aggregate pair), unigram joins " +
@@ -483,12 +486,10 @@ object Plans {
         "are 64x|cols| rows forever, so every downstream exchange is " +
         "constant-size regardless of corpus scale."),
     "e5_yield_funnel" ->
-      ("Curation funnel composition: the three stage rules (g1 exact " +
-        "canonical, g2c full-band near-dup read from the session-shared " +
-        "candidate level, t19 quality flags) land in " +
-        "ONE doc_id-keyed left-join tree over per-doc frames, the " +
-        "funnel is a single combinable aggregate, and the 4-row stack " +
-        "unpivot is zero-shuffle — no stage re-scans the corpus."),
+      ("Curation yield funnel: per-doc stage flags join by doc_id from " +
+        "the g1/g2c/t19 kernels (g2c as a filter over the shared " +
+        "candidate level), ONE combinable aggregate, and a " +
+        "zero-shuffle stack unpivot to the 4 funnel rows."),
     "s29_kmeans_merge" ->
       ("Mergeable Lloyd state: two parity-filtered assignment passes " +
         "share the broadcast seed table, partial (n, sum) rows merge " +
@@ -521,11 +522,10 @@ object Plans {
         "reuse); pair fan-out is cap-bounded per order and top-20 is " +
         "TakeOrderedAndProject."),
     "q45_basket_lift" ->
-      ("Lift re-ranking: the capped basket table materializes once for " +
-        "its three consumers (pair expansion, item frequencies, order " +
-        "count); the frequency joins are broadcast (item-bounded) and " +
-        "lift divides exact integer products only in the final " +
-        "projection."),
+      ("Basket lift: co-occurrence pairs reduce per (part_a, part_b) " +
+        "with part supports broadcast after their own reductions; the " +
+        "single cross carries the 1-row basket total; top-k via " +
+        "TakeOrdered."),
     "q46_incremental_agg" ->
       ("Incremental-maintenance proof: state and delta branches are " +
         "partial-sum aggregates over ONE scan each; the merge is a " +
@@ -641,17 +641,10 @@ object Plans {
         "are Σ c(c−1)/2 combinable counts — the census never plans a " +
         "pairwise join, and its cost is the cluster build it grades."),
     // r13: the previously-unpinned >1s-steady set (VERDICT r12 item 5)
-    "m9_phash_neardup" ->
-      ("Perceptual-hash near-dup: band explode then an EQUI-join on the " +
-        "(band, value) bucket — pigeonhole makes the prune lossless for " +
-        "hamming≤3; never an all-pairs product, 72-byte shuffle width."),
     "m3_media_meta" ->
       ("Real container-header decode: payload assembly is one codegen'd " +
         "projection feeding the mapPartitions parse seam — no Exchange " +
         "between the scan and the decode, payloads never shuffle."),
-    "y7_cdc_chunks" ->
-      ("Content-defined chunking: one Generate + one per-doc window over " +
-        "a single doc_id exchange; no join anywhere."),
     "x33_winsorized_mean" ->
       ("Winsorized mean: every exchange is on the group key; the " +
         "per-group quantile cut points arrive as bounded broadcasts — " +
@@ -667,38 +660,14 @@ object Plans {
       ("Median absolute deviation: two median passes, both over the " +
         "group-keyed bin reduction; broadcasts are the per-group " +
         "medians (≤|groups| rows)."),
-    "x37_spearman" ->
-      ("Spearman correlation: rank windows consume the REDUCED " +
-        "distinct-value tables (domain-bounded), then one moment " +
-        "aggregate — raw rows are never globally sorted."),
-    "x52_decile_shift" ->
-      ("Decile shift matrix: cut points window the reduced spend table, " +
-        "the only cross is the 10-row decile Range, and the matrix " +
-        "joins period deciles by equality."),
-    "q45_basket_lift" ->
-      ("Basket lift: co-occurrence pairs reduce per (part_a, part_b) " +
-        "with part supports broadcast after their own reductions; the " +
-        "single cross carries the 1-row basket total; top-k via " +
-        "TakeOrdered."),
-    "q47_next_purchase" ->
-      ("Next-purchase transitions: one equality self-join on " +
-        "o_custkey (sort-merge at scale), transition counts reduce per " +
-        "(from, to) pair, TakeOrdered top-k."),
-    "t21_dsir_weights" ->
-      ("DSIR importance weights: per-doc and per-bucket reductions join " +
-        "by id; the corpus-total denominator is the one 1-row cross."),
     "t22_ngram_novelty" ->
       ("N-gram novelty: shingle df reduces per gram (vocab-bounded), " +
         "per-doc novelty joins the broadcast df table by id."),
     "t23_burstiness" ->
       ("Token burstiness: two stacked vocab-keyed aggregates (doc " +
         "frequency vs occurrence mass), no join, top-k."),
-    "e5_yield_funnel" ->
-      ("Curation yield funnel: per-doc stage flags join by doc_id from " +
-        "the g1/g2c/t19 kernels (g2c as a filter over the shared " +
-        "candidate level), ONE combinable aggregate, and a " +
-        "zero-shuffle stack unpivot to the 4 funnel rows."),
   )
+  requireDistinct(picks.map(_._1))
 
   /** Lazy-core overrides: these registered queries serve session-shared
     * MATERIALIZED tables (DedupQueries.shared*), so their public plan is
@@ -819,8 +788,10 @@ object Plans {
          |every exchange, broadcasts only on genuinely small sides, and no
          |nested-loop/cartesian joins anywhere.
          |""".stripMargin
+    // masked so that two runs differ only in expr, plan and RDD ids
+    val body = Fingerprints.maskSessionNames(sections.mkString("\n"))
     Files.write(Paths.get(outFile),
-      (header + "\n" + sections.mkString("\n")).getBytes(StandardCharsets.UTF_8))
+      (header + "\n" + body).getBytes(StandardCharsets.UTF_8))
     println(s"[plans] wrote ${picks.size} plans to $outFile")
     spark.stop()
   }

@@ -1,7 +1,13 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -10,14 +16,69 @@ import org.apache.spark.sql.functions._
   * cluster scale the same code reads a 100 TB table: parquet scans get
   * column pruning + predicate pushdown from Catalyst for free, so every
   * downstream operator should select only the columns it needs.
+  *
+  * [[table]] is graft's one parquet reader, and it reads each table's
+  * schema once per JVM. A bare `spark.read.parquet` infers the schema with
+  * a one-task Spark job that reads a footer, on every call (about 0.1 s
+  * warm, 4 cores, `local[4]`).
+  * The memo keeps the inferred schema per (path, schema-conversion confs),
+  * checked against the table's leaf files (path, length, modification
+  * time) on each read. A hit reads with the schema given, which gives the
+  * same relation and plan: Spark makes a given schema nullable just as it
+  * does an inferred one. A changed file set re-infers and replaces the
+  * entry.
   */
 object Tables {
+  /** Session confs that steer how a parquet footer converts to a Spark
+    * schema; part of the memo key, so a toggled conf re-infers. */
+  private val SchemaConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.caseSensitive")
+
+  /** (path, length, modification time) of every leaf file of a table. */
+  private type Files = Seq[(String, Long, Long)]
+
+  private val schemas =
+    new ConcurrentHashMap[(String, Seq[Option[String]]), (Files, StructType)]
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame = {
     // Testdata timestamps are parquet TIMESTAMP(NANOS), which the Spark
     // reader rejects; read them as raw nano longs (converted per-table
     // below with exact integer division).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    // an unlistable path infers as a bare read does, so it fails the same way
+    Try(leafFiles(spark, path)).toOption.fold(spark.read.parquet(path)) { files =>
+      val key = (path, SchemaConfs.map(spark.conf.getOption))
+      Option(schemas.get(key)).filter(_._1 == files) match {
+        case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+        case None =>
+          // inferred with no lock held: racing readers both infer the
+          // same schema, and the last put wins
+          val df = spark.read.parquet(path)
+          schemas.put(key, (files, df.schema))
+          df
+      }
+    }
+  }
+
+  private def leafFiles(spark: SparkSession, path: String): Files = {
+    val p = new Path(path)
+    val it = p.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(p, true)
+    val files = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    files.result().sorted
   }
 
   /** Nano-long → naive micro timestamp (TIMESTAMP_NTZ, so parquet sinks

@@ -1,10 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 import graft.operators.{Dedup, Materialize}
 
@@ -23,33 +19,6 @@ class MaterializeSpec extends SparkSpec {
     // the parent plan is gone — downstream audits see a stored scan
     assert(m.queryExecution.executedPlan.toString.contains("ExistingRDD"),
       m.queryExecution.executedPlan.toString.take(400))
-  }
-
-  /** Jobs that `body` starts, counted by a listener. A marker job run
-    * after `body` drains the listener queue: events arrive in order, so
-    * once the marker's end is seen, every job of `body` has been seen. */
-  private def jobsOf(body: => Unit): Int = {
-    val marker = "materialize-spec-marker"
-    val started = new AtomicInteger
-    val markerEnded = new CountDownLatch(1)
-    @volatile var markerJob = -1
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == marker) markerJob = e.jobId
-        else started.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == markerJob) markerEnded.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobGroup(marker, marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(markerEnded.await(60, TimeUnit.SECONDS), "marker job never ended")
-      started.get
-    } finally sc.removeSparkListener(listener)
   }
 
   test("default mode: the frame carries its measured row count, from one job") {

@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,6 +12,33 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
+
+  /** Jobs that `body` starts, counted by a listener. A marker job run
+    * after `body` drains the listener queue: events arrive in order, so
+    * once the marker's end is seen, every job of `body` has been seen. */
+  def jobsOf(body: => Unit): Int = {
+    val marker = "spark-spec-jobs-marker"
+    val started = new AtomicInteger
+    val markerEnded = new CountDownLatch(1)
+    @volatile var markerJob = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == marker) markerJob = e.jobId
+        else started.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == markerJob) markerEnded.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(markerEnded.await(60, TimeUnit.SECONDS), "marker job never ended")
+      started.get
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Runs `main`'s `main(args)` in a child JVM with this JVM's classpath
     * and `--add-opens` flags and asserts it exits 0. For cases that need
