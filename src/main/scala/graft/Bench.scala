@@ -2,15 +2,20 @@ package graft
 import org.apache.spark.sql.SparkSession
 import graft.operators.Materialize
 object Bench {
+  /** Local cores of the session (`local[n]`); ProfileQuery reads the same. */
+  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
+  /** Shuffle partitions default to the CPU count (the recorded-baseline
+    * context); override to probe scale-sized partitioning — r14 G23Diag:
+    * at sf1, 128 partitions cut the wedge-stage hash-agg spill 9.1 ->
+    * 0.8 GB and the warmed g23 72 -> 60 s. Re-baseline before gating a
+    * sweep recorded under a different value. */
+  private[graft] def shufflePartitions: String =
+    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // shuffle partitions default to the CPU count (the recorded-baseline
-    // context); override to probe scale-sized partitioning — r14 G23Diag:
-    // at sf1, 128 partitions cut the wedge-stage hash-agg spill 9.1 ->
-    // 0.8 GB and the warmed g23 72 -> 60 s. Re-baseline before gating a
-    // sweep recorded under a different value.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+    val shufParts = shufflePartitions
     // optional comma-separated name filter — scale probes (e.g. the sf10
     // top-20 sweep) time a subset without paying the full surface
     val only = sys.env.get("SPARK_GRAFT_ONLY")

@@ -3,8 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc per-query profiler: times the named queries (default: all) on a
-  * scale-factor dir with the same session config as Bench, printing each
-  * run so warm-up vs steady-state is visible.
+  * scale-factor dir with the same session config as Bench (cores from
+  * `SPARK_GRAFT_CPUS`, shuffle partitions from
+  * `SPARK_GRAFT_SHUFFLE_PARTITIONS`), printing each run so warm-up vs
+  * steady-state is visible.
   *
   * Usage: runMain graft.ProfileQuery <sfDir> <runs> [query ...]
   */
@@ -14,9 +16,9 @@ object ProfileQuery {
     val runs = args.lift(1).map(_.toInt).getOrElse(3)
     val names = args.drop(2).toSeq
     val spark = SparkSession.builder()
-      .master("local[32]")
+      .master(s"local[${Bench.cpus}]")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", Bench.shufflePartitions)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

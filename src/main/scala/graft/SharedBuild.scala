@@ -21,6 +21,11 @@ import org.apache.spark.sql.SparkSession
   * caller builds first, or a rebuild after an eviction, costs at most
   * one recompute, never a different result.
   *
+  * Each build runs with the Spark local property [[LevelProperty]] set
+  * to its level (the caller's value is restored afterwards), so a
+  * listener can group the jobs of each level; a nested build tags its
+  * own jobs with its own level.
+  *
   * An entry may own a tracked temp dir (the bucketed layouts' parquet).
   * Every get-or-build first runs the hygiene sweeps:
   *  - [[evictStopped]]: entries of sessions whose context is stopped are
@@ -43,6 +48,9 @@ private[graft] object SharedBuild {
 
   val MaxCachedSessions = 4
 
+  /** The local property naming the level whose build started a job. */
+  val LevelProperty = "graft.shared.level"
+
   /** Get-or-build the `(s, dir, level)` entry. */
   def apply[V](s: SparkSession, dir: String, level: String)(build: => V): V =
     getOrBuild(s, dir, level)(Entry(build, None))
@@ -62,7 +70,15 @@ private[graft] object SharedBuild {
       entry: => Entry): V = {
     evictStopped()
     boundSessions(s)
-    flight(entries, Key(s, dir, level))(entry).value.asInstanceOf[V]
+    flight(entries, Key(s, dir, level))(tagged(s, level)(entry))
+      .value.asInstanceOf[V]
+  }
+
+  private def tagged[T](s: SparkSession, level: String)(build: => T): T = {
+    val sc = s.sparkContext
+    val outer = sc.getLocalProperty(LevelProperty)
+    sc.setLocalProperty(LevelProperty, level)
+    try build finally sc.setLocalProperty(LevelProperty, outer)
   }
 
   /** Drop entries of dead sessions, deleting their dirs, and delete the

@@ -4,7 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -70,15 +70,17 @@ object Tables {
     }
   }
 
+  /** A recursive `listStatus` walk that reads only path, length and
+    * mtime. `FileSystem.listFiles` builds a `LocatedFileStatus` per file,
+    * which copies its permissions, and on the local filesystem reading
+    * those forks an `ls -ld` (about 5 ms per table read). */
   private def leafFiles(spark: SparkSession, path: String): Files = {
     val p = new Path(path)
-    val it = p.getFileSystem(spark.sessionState.newHadoopConf()).listFiles(p, true)
-    val files = Seq.newBuilder[(String, Long, Long)]
-    while (it.hasNext) {
-      val f = it.next()
-      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-    }
-    files.result().sorted
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def walk(st: FileStatus): Seq[(String, Long, Long)] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+    walk(fs.getFileStatus(p)).sorted
   }
 
   /** Nano-long → naive micro timestamp (TIMESTAMP_NTZ, so parquet sinks

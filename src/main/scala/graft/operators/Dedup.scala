@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Encoders, GraftColumns, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.util.{AccumulatorV2, LongAccumulator}
 
 import graft.{Q, SharedBuild, Tables}
 import graft.functions.Parity.pround
@@ -255,9 +255,12 @@ object Dedup {
     *
     * r16 (VERDICT r15 item 1): this constant is no longer the cap — it
     * is the cap CEILING. The session cap is density-DERIVED per index at
-    * build time ([[autoCapped]], the g26 budget rule over the bucket-size
-    * histogram), clamped to [[[DefaultCapFloor]], this ceiling]. A fixed
-    * cap was scale-unsafe in both directions: too high admits the df²
+    * build time (the g26 budget rule over the bucket-size histogram:
+    * in-plan through [[autoCapped]], or on the driver by [[bandPairs]]
+    * for the session-shared candidate level, whose bucket pass keeps
+    * member ids only up to the largest cap the rule can return),
+    * clamped to [[[DefaultCapFloor]], this ceiling]. A fixed cap was
+    * scale-unsafe in both directions: too high admits the df²
     * tail that melted the r14 sf10 run; too low silently splits organic
     * dup groups. `SPARK_GRAFT_BUCKET_DF_CAP` overrides the ceiling, read
     * once at class load and interpolated into BOTH the Spark plans and
@@ -277,10 +280,8 @@ object Dedup {
     * default ([[autoCapped]]; `cap = Some(c)` pins a fixed cap for
     * specs/diagnostics). */
   private[graft] def cappedSignature(sig: DataFrame,
-      cap: Option[Int] = None,
-      capTab: Option[DataFrame] = None): DataFrame =
-    autoCapped(sig, Seq("band", "minh"), cap, ceilCap = DefaultBucketDfCap,
-      capTab = capTab)
+      cap: Option[Int] = None): DataFrame =
+    autoCapped(sig, Seq("band", "minh"), cap, ceilCap = DefaultBucketDfCap)
 
   /** G2b: LSH candidate pairs — equality join on the (band, minh) bucket
     * key, restricted to buckets with <= bucketCap members (documented-
@@ -297,13 +298,12 @@ object Dedup {
 
   /** The capped bucket self-join over an existing signature table. The
     * session-shared candidate level ([[DedupQueries.sharedBandPairs]])
-    * is the [[nearDupsFromSig]] form instead, so it keeps each pair's
-    * band count; this form serves [[minhashCandidates]] and g25's
-    * augmented signature table. */
+    * is built by [[bandPairs]] instead, which keeps each pair's band
+    * count; this form serves [[minhashCandidates]] and g25's augmented
+    * signature table. */
   private[graft] def candidatesFromSig(rawSig: DataFrame,
-      bucketCap: Option[Int] = None,
-      capTab: Option[DataFrame] = None): DataFrame = {
-    val sig = cappedSignature(rawSig, bucketCap, capTab)
+      bucketCap: Option[Int] = None): DataFrame = {
+    val sig = cappedSignature(rawSig, bucketCap)
     sig.as("a").join(sig.as("b"),
         col("a.band") === col("b.band") && col("a.minh") === col("b.minh") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -323,19 +323,86 @@ object Dedup {
 
   /** The AND-amplified bucket self-join over an existing signature
     * table: (doc_a, doc_b, shared_bands) for the pairs colliding in at
-    * least `minShared` bands. At `minShared = 1` it is the session-shared
-    * candidate level ([[DedupQueries.sharedBandPairs]]), which the
-    * registered e4/e5/g24 read instead of re-running the join. */
+    * least `minShared` bands, in one lazy plan. At `minShared = 1` and
+    * the same cap it has the rows of [[bandPairs]], the bounded bucket
+    * pass that builds the session-shared candidate level
+    * ([[DedupQueries.sharedBandPairs]]); PropertySpec pins the two
+    * equal. */
   private[graft] def nearDupsFromSig(rawSig: DataFrame, minShared: Int,
-      bucketCap: Option[Int] = None,
-      capTab: Option[DataFrame] = None): DataFrame = {
-    val sig = cappedSignature(rawSig, bucketCap, capTab)
+      bucketCap: Option[Int] = None): DataFrame = {
+    val sig = cappedSignature(rawSig, bucketCap)
     sig.as("a").join(sig.as("b"),
         col("a.band") === col("b.band") && col("a.minh") === col("b.minh") &&
           col("a.doc_id") < col("b.doc_id"))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("shared_bands"))
       .where(col("shared_bands") >= minShared)
+  }
+
+  /** The session-shared candidate level's build: (doc_a, doc_b,
+    * shared_bands) for every pair colliding in at least one capped
+    * (band, minh) bucket, and the bucket cap it derived — the rows of
+    * `nearDupsFromSig(sig, 1, Some(cap))` at that cap, from one bounded
+    * pass per bucket instead of a df aggregate, its join-back, a cap
+    * table and a self-join:
+    *
+    *  1. the signatures are shuffled once on (band, minh) and sorted by
+    *     (band, minh, doc_id) within partitions; [[BucketWalk]] walks
+    *     each bucket's run once and emits (band, minh, df, ids), ids
+    *     being the sorted member ids while df is at most the largest cap
+    *     the rule can return and null above it — no buffer holds more.
+    *     Singleton buckets emit nothing: they hold no pair. The result
+    *     is materialized, and that job's result stage also fills two
+    *     accumulators: the df histogram (2 ≤ df ≤ ceilCap) and the
+    *     count of band-0 rows;
+    *  2. the driver applies [[budgetRule]] to them, with no Spark job.
+    *     The band-0 count is `countDistinct(doc_id)` of the signatures,
+    *     the `n_docs` of [[derivedCap]], because `doc_id` is the key of
+    *     `documents` ([[minhashSignature]] assumes it) and every signed
+    *     document has exactly one band-0 row;
+    *  3. one `flatMap` emits each admitted bucket's (doc_a < doc_b) pairs
+    *     — at most cap²/2 per bucket — and one `groupBy(doc_a, doc_b)`
+    *     counts the bands, materialized as the level.
+    *
+    * Four jobs in all: each materialization runs its shuffle's map stage
+    * and its result stage. The columns, types and nullability are
+    * [[nearDupsFromSig]]'s. */
+  private[graft] def bandPairs(sig: DataFrame): (DataFrame, Long) =
+    bandPairs(sig, DefaultCapBudgetPerDoc, DefaultCapFloor, DefaultBucketDfCap)
+
+  /** [[bandPairs]] under the given budget rule, so specs reach a bucket
+    * above the ceiling at small sizes. */
+  private[graft] def bandPairs(sig: DataFrame, budgetPerDoc: Long,
+      floorCap: Int, ceilCap: Int): (DataFrame, Long) = {
+    val sc = sig.sparkSession.sparkContext
+    val hist = new DfHistogram
+    sc.register(hist, "bucket df histogram")
+    val nDocs = sc.longAccumulator("band-0 signature rows")
+    val maxIds = floorCap max ceilCap
+    val walk: Iterator[(Int, Long, java.lang.Long)] => Iterator[Bucket] =
+      BucketWalk.buckets(_, maxIds, ceilCap, hist, nDocs)
+    val buckets = Materialize.frame(sig
+      .select(col("band").cast("int"), col("minh").cast("long"),
+        col("doc_id").cast("long"))
+      .repartition(col("band"), col("minh"))
+      .sortWithinPartitions("band", "minh", "doc_id")
+      .as(Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong, Encoders.LONG))
+      .mapPartitions(walk)(Encoders.product[Bucket])
+      .toDF())
+    val cap = budgetRule(hist.value, nDocs.value, budgetPerDoc, floorCap, ceilCap)
+    // boxed ids keep doc_a/doc_b nullable, as the self-join's columns are
+    val boxedPair = Encoders.tuple(Encoders.LONG, Encoders.LONG)
+    val pairs = buckets.where(col("df") <= cap)
+      .as(Encoders.product[Bucket])
+      .flatMap(BucketWalk.pairs)(boxedPair)
+      .toDF("doc_a", "doc_b")
+      // true of every emitted pair; it hands the stored level the
+      // self-join's constraints (doc_a < doc_b, neither null), so its
+      // readers plan no null filter of their own
+      .where(col("doc_a") < col("doc_b"))
+      .groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).as("shared_bands"))
+    (Materialize.frame(pairs), cap)
   }
 
   /** G6: dedup clusters — connected components over the candidate-pair
@@ -815,6 +882,25 @@ object Dedup {
       coalesce(col("rec0"), lit(floorCap.toLong)))).as("cap"))
   }
 
+  /** [[budgetCap]]'s rule on the driver, over a df → key-count histogram
+    * (levels outside [2, ceilCap] are ignored) and a document count: the
+    * same arithmetic, with no Spark job. CapDerivationSpec pins the two
+    * equal. [[bandPairs]] applies it to the histogram its bucket pass
+    * collected. */
+  private[graft] def budgetRule(hist: collection.Map[Long, Long], nDocs: Long,
+      budgetPerDoc: Long = DefaultCapBudgetPerDoc,
+      floorCap: Int = DefaultCapFloor,
+      ceilCap: Int = DefaultShingleDfCap): Long = {
+    val levels = hist.toSeq
+      .filter { case (df, _) => df >= 2 && df <= ceilCap }.sortBy(_._1)
+    val cum = levels
+      .scanLeft(0L) { case (c, (df, n)) => c + n * (df * (df - 1) / 2) }.tail
+    val rec0 = levels.map(_._1).zip(cum)
+      .collect { case (df, c) if c <= nDocs * budgetPerDoc => df }
+      .maxOption
+    floorCap.toLong max (ceilCap.toLong min rec0.getOrElse(floorCap.toLong))
+  }
+
   /** Density-derived df-capped index over a (doc_id, keys...) table —
     * THE default capping path since r16 (VERDICT r15 item 1: a fixed
     * default cap re-created the measured r14 df² disk death on a dense
@@ -827,7 +913,10 @@ object Dedup {
     * exchange is deduplicated by runtime exchange reuse. `fixedCap`
     * (the per-call override and the env-ceiling escape hatch) bypasses
     * the derivation entirely — that is the pre-r16 behavior, kept for
-    * diagnostics (CapDiag ladders) and specs that pin exact caps. */
+    * specs that pin exact caps. This is the lazy per-plan path (g2's
+    * lazy core, g13, g25/g30's augmented tables, the shingle and winnow
+    * indexes); the session-shared LSH candidate level applies the same
+    * rule from its own bucket pass instead ([[bandPairs]]). */
   private[graft] def autoCapped(tbl: DataFrame, keys: Seq[String],
       fixedCap: Option[Int] = None,
       ceilCap: Int = DefaultShingleDfCap,
@@ -1039,20 +1128,29 @@ object DedupQueries {
     SharedBuild(s, d, "clusters")(dedupClusters(sharedCandidates(s, d)))
 
   /** Session-shared materialized LSH candidate level — the same
-    * persisted-table discipline one level lower: the signature build +
-    * capped (band, minh) bucket self-join runs ONCE per corpus. The level
-    * stores (doc_a, doc_b, shared_bands): every pair (doc_a < doc_b)
-    * colliding in at least one capped bucket, with the number of bands it
-    * collides in — [[Dedup.nearDupsFromSig]] at `minShared = 1`. Readers:
-    * the pair graph [[sharedCandidates]], the full-band near-dup audits
-    * e4/e5 (`shared_bands >= 4`) and g24's band-agreement histogram. The
-    * pair table is tiny relative to the corpus (bounded by
-    * Σ min(df,cap)²/2 over buckets), so materializing it is cheap;
-    * content is independent of which query builds it first. */
+    * persisted-table discipline one level lower: the capped (band, minh)
+    * bucket pairing over [[sharedSignatures]] runs ONCE per corpus. The
+    * level stores (doc_a, doc_b, shared_bands): every pair (doc_a <
+    * doc_b) colliding in at least one capped bucket, with the number of
+    * bands it collides in — the rows of [[Dedup.nearDupsFromSig]] at
+    * `minShared = 1`, built by [[Dedup.bandPairs]]'s one bounded pass per
+    * bucket, which also derives the bucket cap (the g26 budget rule,
+    * ceiling [[Dedup.DefaultBucketDfCap]]) from the same job, so no cap
+    * table is built. Readers: the pair graph [[sharedCandidates]], the
+    * full-band near-dup audits e4/e5 (`shared_bands >= 4`) and g24's
+    * band-agreement histogram. The pair table is tiny relative to the
+    * corpus (bounded by Σ min(df,cap)²/2 over buckets), so materializing
+    * it is cheap; content is independent of which query builds it
+    * first. */
   private[graft] def sharedBandPairs(s: SparkSession, d: String): DataFrame =
-    SharedBuild(s, d, "candidates")(Materialize.frame(
-      nearDupsFromSig(sharedSignatures(s, d), 1,
-        capTab = Some(sharedBucketCap(s, d)))))
+    candidateLevel(s, d)._1
+
+  /** The bucket cap the candidate level's build derived and applied. */
+  private[graft] def candidateBucketCap(s: SparkSession, d: String): Long =
+    candidateLevel(s, d)._2
+
+  private def candidateLevel(s: SparkSession, d: String): (DataFrame, Long) =
+    SharedBuild(s, d, "candidates")(bandPairs(sharedSignatures(s, d)))
 
   /** The LSH candidate-pair graph (doc_a, doc_b): the pair projection of
     * [[sharedBandPairs]], whose rows are already distinct pairs. Every
@@ -1086,10 +1184,10 @@ object DedupQueries {
   /** Session-shared materialized 4-band minhash signature table: one
     * narrow pass of [[Dedup.minhashSignature]] over `documents`, which
     * never builds [[sharedShingles]]. Consumers: the candidate build
-    * (which e4, e5 and g24 read), the bucket cap, the uncapped bucket
-    * census g21, the split incremental g13 (signatures are per-doc, so a
-    * doc-subset's table is a doc_id filter of this one) and g25's
-    * augmented table. */
+    * (which e4, e5 and g24 read, and which derives the bucket cap), the
+    * uncapped bucket census g21, the split incremental g13 (signatures
+    * are per-doc, so a doc-subset's table is a doc_id filter of this
+    * one) and g25's augmented table. */
   private[graft] def sharedSignatures(s: SparkSession, d: String): DataFrame =
     SharedBuild(s, d, "signatures")(Materialize.frame(
       minhashSignature(docs(s, d), 4)))
@@ -1173,7 +1271,9 @@ object DedupQueries {
     * `capTab` — their plans broadcast-crossJoin the stored row instead
     * of re-aggregating the index. ONLY full-corpus consumers read these:
     * g13 (doc-subset index side) and g25/g30 (augmented corpora) keep
-    * the in-plan derivation because their input density differs. */
+    * the in-plan derivation because their input density differs. The
+    * LSH bucket index has no cap table: [[sharedBandPairs]]' build
+    * derives its cap from its own bucket pass. */
 
   /** Derived df cap for the shingle index (g4/g15/g29's `sh_h` key).
     * Built from [[sharedShingles]] — the bucketed projection has
@@ -1182,13 +1282,6 @@ object DedupQueries {
     SharedBuild(s, d, "cap:sh_h")(Materialize.frame(
       Dedup.derivedCap(sharedShingles(s, d), Seq("sh_h"),
         Dedup.DefaultShingleDfCap)))
-
-  /** Derived df cap for the LSH bucket index ((band, minh) — the
-    * candidate build, g24's agreement curve, e4/e5's near-dup rule). */
-  private[graft] def sharedBucketCap(s: SparkSession, d: String): DataFrame =
-    SharedBuild(s, d, "cap:bucket")(Materialize.frame(
-      Dedup.derivedCap(sharedSignatures(s, d), Seq("band", "minh"),
-        Dedup.DefaultBucketDfCap)))
 
   /** Derived df cap for the winnow fingerprint index (`fp` —
     * y9/g27/g28), over the distinct (doc_id, fp) projection the
@@ -1973,4 +2066,91 @@ private[operators] final class UnionFind {
       i += 1
     }
   }
+}
+
+/** One LSH bucket of [[Dedup.bandPairs]]'s walk: its document frequency
+  * and its sorted member ids, null when df is past the walk's id bound. */
+private[graft] final case class Bucket(band: Int, minh: Long, df: Long,
+    ids: Array[Long])
+
+/** [[Dedup.bandPairs]]'s partition-local bucket pass. */
+private[graft] object BucketWalk {
+
+  /** Walks a partition's (band, minh, doc_id) rows, sorted by all three,
+    * one bucket run at a time, and emits one [[Bucket]] per run of two
+    * or more rows. The id buffer stops at `maxIds` entries; a longer run
+    * is only counted. Each bucket with 2 ≤ df ≤ `ceilCap` adds its df to
+    * `hist`, and each band-0 row with an id adds one to `band0`. A null
+    * id counts towards df, as the self-join's `count` does, but joins no
+    * pair. */
+  def buckets(rows: Iterator[(Int, Long, java.lang.Long)], maxIds: Int,
+      ceilCap: Int, hist: DfHistogram,
+      band0: LongAccumulator): Iterator[Bucket] = {
+    val in = rows.buffered
+    new Iterator[Bucket] {
+      private var ids = new Array[Long](16)
+      private var ready: Bucket = null
+
+      def hasNext: Boolean = {
+        while (ready == null && in.hasNext) {
+          val (band, minh, _) = in.head
+          var df = 0L
+          var n = 0
+          while (in.hasNext && in.head._1 == band && in.head._2 == minh) {
+            val id = in.next()._3
+            df += 1
+            if (id != null) {
+              if (band == 0) band0.add(1L)
+              if (df <= maxIds) {
+                if (n == ids.length) ids = java.util.Arrays.copyOf(ids, n * 2)
+                ids(n) = id
+                n += 1
+              }
+            }
+          }
+          if (df >= 2) {
+            if (df <= ceilCap) hist.add(df)
+            ready = Bucket(band, minh, df,
+              if (df <= maxIds) java.util.Arrays.copyOf(ids, n) else null)
+          }
+        }
+        ready != null
+      }
+
+      def next(): Bucket = {
+        if (!hasNext) throw new NoSuchElementException
+        val b = ready
+        ready = null
+        b
+      }
+    }
+  }
+
+  /** The (doc_a < doc_b) pairs of an admitted bucket's sorted ids. */
+  def pairs(b: Bucket): Iterator[(java.lang.Long, java.lang.Long)] = {
+    val ids = b.ids
+    for {
+      i <- ids.indices.iterator
+      j <- (i + 1 until ids.length).iterator
+      if ids(i) < ids(j)
+    } yield (Long.box(ids(i)), Long.box(ids(j)))
+  }
+}
+
+/** df → number of buckets with that df, summed over tasks. */
+private[graft] final class DfHistogram
+    extends AccumulatorV2[Long, Map[Long, Long]] {
+  private val counts = scala.collection.mutable.LongMap.empty[Long]
+
+  def isZero: Boolean = counts.isEmpty
+  def copy(): DfHistogram = {
+    val c = new DfHistogram
+    c.counts ++= counts
+    c
+  }
+  def reset(): Unit = counts.clear()
+  def add(df: Long): Unit = counts(df) = counts.getOrElse(df, 0L) + 1L
+  def merge(other: AccumulatorV2[Long, Map[Long, Long]]): Unit =
+    other.value.foreach { case (df, n) => counts(df) = counts.getOrElse(df, 0L) + n }
+  def value: Map[Long, Long] = counts.toMap
 }

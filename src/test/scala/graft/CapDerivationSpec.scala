@@ -27,6 +27,35 @@ class CapDerivationSpec extends SparkSpec {
     assert(cap(dfs, 100) === 80L)
   }
 
+  test("the driver-side budgetRule equals the in-plan budgetCap on random df tables") {
+    val rnd = new scala.util.Random(7)
+    // (budgetPerDoc, floor, ceiling): the stock rule, and a small one
+    // whose every clamp a short table reaches
+    val rules = Seq((Dedup.DefaultCapBudgetPerDoc, Dedup.DefaultCapFloor,
+      Dedup.DefaultBucketDfCap), (2L, 3, 9))
+    var between = 0
+    (0 until 24).foreach { i =>
+      val (budget, floor, ceil) = rules(i % 2)
+      val nDocs = 1L + rnd.nextInt(300)
+      // df levels below the floor, between floor and ceiling, and above
+      // the ceiling, with repeats so levels carry several keys
+      val dfs = Seq.fill(rnd.nextInt(40)) {
+        val hi = ceil + ceil / 2
+        Seq(1 + rnd.nextInt(floor + 1), floor + rnd.nextInt(ceil - floor + 1),
+          1 + rnd.nextInt(hi))(rnd.nextInt(3)).toLong
+      }
+      val inPlan = Dedup.budgetCap(dfs.toDF("df"), Seq(nDocs).toDF("n_docs"),
+        budget, floor, ceil).head().getLong(0)
+      val hist = dfs.groupBy(identity).view.mapValues(_.size.toLong).toMap
+      val onDriver = Dedup.budgetRule(hist, nDocs, budget, floor, ceil)
+      assert(onDriver === inPlan, s"rule $i: n_docs $nDocs, dfs $dfs")
+      if (onDriver > floor && onDriver < ceil && i % 2 == 0) between += 1
+    }
+    // the stock rule's budget bound strictly inside its clamps in some
+    // tables, not only at the floor where test-scale corpora sit
+    assert(between >= 2, s"$between tables bound between floor and ceiling")
+  }
+
   test("budget rule clamps: floor on sparse/tiny, ceiling bounds the histogram") {
     // sparse: every level fits, max admitted df=2 -> clamped UP to floor
     assert(cap(Seq(2, 2, 2), 1) === Dedup.DefaultCapFloor.toLong)
@@ -112,12 +141,13 @@ class CapDerivationSpec extends SparkSpec {
     assert(sharedSh === perPlanSh)
     assert(sharedSh === Dedup.recommendShingleDfCap(ss).head()
       .getAs[Long]("recommended_cap"))
-    // bucket cap over the shared signature table
+    // bucket cap: the one the candidate build derived from its bucket
+    // pass == the in-plan derivation over the shared signature table
     val sig = DedupQueries.sharedSignatures(spark, d)
-    val sharedBk = DedupQueries.sharedBucketCap(spark, d).head().getLong(0)
+    val usedBk = DedupQueries.candidateBucketCap(spark, d)
     val perPlanBk = Dedup.derivedCap(sig, Seq("band", "minh"),
       Dedup.DefaultBucketDfCap).head().getLong(0)
-    assert(sharedBk === perPlanBk)
+    assert(usedBk === perPlanBk)
     // winnow cap over the distinct (doc_id, fp) projection
     val fp = DedupQueries.sharedWinnowFps(spark, d)
       .select(col("doc_id"), col("fp")).distinct()

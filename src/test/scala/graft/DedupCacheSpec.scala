@@ -25,8 +25,10 @@ class DedupCacheSpec extends SparkSpec {
     DedupQueries.sharedCandidates(s1, dir).count()
     val perSession = total - before
     // the layered build populates the whole ladder below candidates
-    // (signatures, the bucket cap and candidates)
-    assert(perSession >= 3, SharedBuild.levelCounts.toString)
+    // (signatures and candidates, whose build derives the bucket cap)
+    assert(perSession === 2, SharedBuild.levelCounts.toString)
+    assert(SharedBuild.levelCounts.keySet === Set("signatures", "candidates"),
+      SharedBuild.levelCounts.toString)
 
     // a second session gets its own entries (keyed by (session, dir))
     val s2 = spark.newSession()
@@ -78,15 +80,32 @@ class DedupCacheSpec extends SparkSpec {
       "g2_minhash_pairs", "e4_dedup_quality", "e5_yield_funnel", "t1_langid",
       "t2_quality").foreach(run)
     val built = SharedBuild.levelCounts
-    Seq("signatures", "cap:bucket", "candidates", "clusters").foreach { l =>
+    Seq("signatures", "candidates", "clusters").foreach { l =>
       assert(built.get(l) === Some(1), s"$l: $built")
     }
     assert(!built.contains("shingles"), built.toString)
+    assert(!built.keySet.exists(_.startsWith("cap:")), built.toString)
     // a shingle reader still builds the shingle level, once per session
     run("g4_ngram_jaccard")
     run("g4_ngram_jaccard")
     assert(SharedBuild.levelCounts.get("shingles") === Some(1),
       SharedBuild.levelCounts.toString)
+  }
+
+  test("building the candidate level runs at most 4 jobs, each tagged with its level") {
+    val dir = sf("sf0.001")
+    val s = spark.newSession()
+    DedupQueries.sharedSignatures(s, dir)
+    val jobs = jobPropertiesOf(DedupQueries.sharedBandPairs(s, dir))
+    val levels = jobs.map(_.getProperty(SharedBuild.LevelProperty))
+    // two for the bucket pass, two for the pairs: each materialization
+    // runs its shuffle's map stage and its result stage
+    assert(jobs.nonEmpty && jobs.size <= 4, levels)
+    assert(levels.forall(_ == "candidates"), levels)
+    // the caller's thread gets its own value back
+    assert(spark.sparkContext.getLocalProperty(SharedBuild.LevelProperty) == null)
+    // a built level runs nothing
+    assert(jobsOf(DedupQueries.sharedBandPairs(s, dir)) === 0)
   }
 
   test("newSession-per-request on one LIVE context stays bounded (ADVICE r13)") {

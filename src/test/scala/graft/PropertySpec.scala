@@ -453,4 +453,47 @@ class PropertySpec extends SparkSpec {
       assert(r.getAs[Long]("discordant") === disc.toLong)
     }
   }
+
+  test("bounded bucket pass: the capped self-join's pairs at its derived cap, on any signature table") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{count, countDistinct, lit}
+    import operators.Dedup
+    // a small rule (floor 2, ceiling 4) puts buckets above the ceiling
+    // and at the cap within a few docs; budget 1/doc binds, 256 does not
+    val (floor, ceil) = (2, 4)
+    val sigGen = for {
+      n <- Gen.choose(1, 14)
+      width <- Gen.choose(0L, 4L)          // minh range: 0 → one bucket per band
+      minhs <- Gen.listOfN(n * 4, Gen.choose(0L, width))
+      nullDoc <- Gen.oneOf(-1, 0, n - 1)   // a doc whose id is null
+      budget <- Gen.oneOf(1L, 256L)
+    } yield ((0 until n).flatMap { d =>
+      val id = if (d == nullDoc) None else Some(d.toLong * 3)
+      (0 until 4).map(b => (id, b, minhs(d * 4 + b)))
+    }, budget)
+    val empty = (Seq.empty[(Option[Long], Int, Long)], 256L)
+    var above, atCap, multiBand = 0
+    val samples = (0 until 30).flatMap(i =>
+      sigGen.apply(Gen.Parameters.default, Seed(42L + i)))
+    (empty +: samples).foreach { case (rows, budget) =>
+      val sig = rows.toDF("doc_id", "band", "minh")
+      val (pairs, cap) = Dedup.bandPairs(sig, budget, floor, ceil)
+      val ref = Dedup.nearDupsFromSig(sig, 1, Some(cap.toInt))
+      val got = pairs.as[(Long, Long, Long)].collect().sorted.toSeq
+      val want = ref.as[(Long, Long, Long)].collect().sorted.toSeq
+      assert(got === want, s"cap $cap, rows $rows")
+      assert(pairs.schema === ref.schema)
+      // the cap came from the walk's accumulators: it is the in-plan rule
+      val derived = Dedup.budgetCap(
+        sig.groupBy("band", "minh").agg(count(lit(1)).as("df")).select("df"),
+        sig.agg(countDistinct("doc_id").as("n_docs")), budget, floor, ceil)
+        .head().getLong(0)
+      assert(cap === derived, s"rows $rows")
+      val dfs = rows.groupBy(r => (r._2, r._3)).values.map(_.size)
+      if (dfs.exists(_ > ceil)) above += 1
+      if (dfs.exists(_ == cap)) atCap += 1
+      if (want.exists(_._3 >= 2)) multiBand += 1
+    }
+    assert(above > 0 && atCap > 0 && multiBand > 0, (above, atCap, multiBand))
+  }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.Properties
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
@@ -13,19 +15,24 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sf(dir: String): String = s"/root/testdata/$dir"
 
-  /** Jobs that `body` starts, counted by a listener. A marker job run
-    * after `body` drains the listener queue: events arrive in order, so
-    * once the marker's end is seen, every job of `body` has been seen. */
-  def jobsOf(body: => Unit): Int = {
+  /** Jobs that `body` starts, counted by a listener. */
+  def jobsOf(body: => Unit): Int = jobPropertiesOf(body).size
+
+  /** The properties of each job that `body` starts, in start order, seen
+    * by a listener. A marker job run after `body` drains the listener
+    * queue: events arrive in order, so once the marker's end is seen,
+    * every job of `body` has been seen. */
+  def jobPropertiesOf(body: => Unit): Seq[Properties] = {
     val marker = "spark-spec-jobs-marker"
-    val started = new AtomicInteger
+    val started = new ConcurrentLinkedQueue[Properties]
     val markerEnded = new CountDownLatch(1)
     @volatile var markerJob = -1
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null &&
-            e.properties.getProperty("spark.jobGroup.id") == marker) markerJob = e.jobId
-        else started.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val props = Option(e.properties).getOrElse(new Properties)
+        if (props.getProperty("spark.jobGroup.id") == marker) markerJob = e.jobId
+        else started.add(props)
+      }
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == markerJob) markerEnded.countDown()
     }
@@ -36,7 +43,7 @@ trait SparkSpec extends AnyFunSuite {
       sc.setJobGroup(marker, marker)
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(markerEnded.await(60, TimeUnit.SECONDS), "marker job never ended")
-      started.get
+      started.asScala.toSeq
     } finally sc.removeSparkListener(listener)
   }
 
