@@ -1,21 +1,51 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.Materialize
 object Bench {
-  /** Local cores of the session (`local[n]`); ProfileQuery reads the same. */
-  private[graft] def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** Untimed warm-up before the first timed query: JIT + codegen, and the
+    * four big tables' schemas in Tables' JVM-wide memo (and their files in
+    * the OS page cache), so the first measured query isn't charged for
+    * start-up. Bench, ProfileQuery and ScaleDemo run it. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit = {
+    spark.range(1000000L).selectExpr("sum(id)").collect()
+    Seq("documents", "events", "lineitem", "embeddings")
+      .foreach(t => Tables.table(spark, sfDir, t).count())
+  }
 
-  /** Shuffle partitions default to the CPU count (the recorded-baseline
-    * context); override to probe scale-sized partitioning — r14 G23Diag:
-    * at sf1, 128 partitions cut the wedge-stage hash-agg spill 9.1 ->
-    * 0.8 GB and the warmed g23 72 -> 60 s. Re-baseline before gating a
-    * sweep recorded under a different value. */
-  private[graft] def shufflePartitions: String =
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+  /** One timed run of a query: wall seconds, the shared-build seconds
+    * paid inside that region (they decompose first-payer rows), and why
+    * it failed, if it did. */
+  private[graft] final case class Run(sec: Double, buildSec: Double,
+      failure: Option[String])
+
+  /** Bench's per-query step, which ProfileQuery shares: time
+    * `fn(spark, sfDir).count()`, catching a failure as its reason
+    * (exception class + the first lines of its message, collapsed —
+    * Spark's stage-failure message carries the root cause on a later
+    * line, "Lost task ...: SparkOutOfMemoryError: ..."), then, untimed,
+    * clear the cache and GC, so cross-query cache growth stays bounded
+    * and the dead shuffle/cache garbage is collected now instead of
+    * mid-next-query. */
+  private[graft] def timeRun(spark: SparkSession, sfDir: String,
+      fn: (SparkSession, String) => DataFrame): Run = {
+    val b0 = SingleFlight.buildSecondsTotal
+    val t0 = System.nanoTime()
+    val failure = try { fn(spark, sfDir).count(); None } catch {
+      case e: Throwable =>
+        val msg = Option(e.getMessage).getOrElse("")
+          .linesIterator.take(4).mkString(" ")
+          .replaceAll("\\s+", " ").take(280)
+        Some(s"${e.getClass.getSimpleName}: $msg")
+    }
+    val sec = (System.nanoTime() - t0) / 1e9
+    val bsec = SingleFlight.buildSecondsTotal - b0
+    spark.catalog.clearCache()
+    System.gc()
+    Run(sec, bsec, failure)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val shufParts = shufflePartitions
     // optional comma-separated name filter — scale probes (e.g. the sf10
     // top-20 sweep) time a subset without paying the full surface
     val only = sys.env.get("SPARK_GRAFT_ONLY")
@@ -25,50 +55,18 @@ object Bench {
     // checkpoint) instead of executor-local blocks
     val ckptDir = sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").filter(_.nonEmpty)
     def freshSession(): SparkSession = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-        .config("spark.sql.shuffle.partitions", shufParts)
-        .config("spark.ui.enabled", "false")
-      val spark = ckptDir.fold(b)(d => b.config(Materialize.ConfKey, d))
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      // Untimed warmup: JIT + codegen + the four big tables' schemas in
-      // Tables' JVM-wide memo (and their files in the OS page cache),
-      // so the first measured query isn't charged for start-up.
-      spark.range(1000000L).selectExpr("sum(id)").collect()
-      Seq("documents", "events", "lineitem", "embeddings")
-        .foreach(t => Tables.table(spark, sfDir, t).count())
+      val spark = GraftSession.fromEnv(
+        ckptDir.map(Materialize.ConfKey -> _).toSeq: _*)
+      warmUp(spark, sfDir)
       spark
     }
-    var failed = List.empty[String]
-    // per-query failure reason (exception class + first message line) —
-    // VERDICT r14 item 7: the sf10 tier artifacts listed bare names
-    // under `errors` while also recording a time, so a failed artifact
-    // couldn't be read without guessing what broke
-    var failReason = Map.empty[String, String]
     // reliable-checkpoint hygiene (ADVICE r14): Spark never deletes
     // reliable checkpoints (cleanCheckpoints unset), so a full-surface
     // sweep used to leave every pass's Materialize'd intermediates on
-    // disk; purge the dir after each pass's session stops
-    // NonFatal + stream close (ADVICE r15): walking a vanishing dir
-    // throws UncheckedIOException (a RuntimeException IOException
-    // misses), and an unclosed walk stream leaks directory fds
-    def purgeCkptDir(): Unit = ckptDir.foreach { d =>
-      import scala.util.control.NonFatal
-      try {
-        import scala.jdk.CollectionConverters._
-        val p = java.nio.file.Paths.get(d)
-        if (java.nio.file.Files.exists(p)) {
-          val walk = java.nio.file.Files.walk(p)
-          try walk.iterator().asScala.toSeq.reverse
-            .filter(_ != p)
-            .foreach(f => try { java.nio.file.Files.deleteIfExists(f); () }
-              catch { case NonFatal(_) => () })
-          finally walk.close()
-        }
-      } catch { case NonFatal(_) => () }
-    }
+    // disk; purge the dir after each pass's session stops (the next
+    // session's first checkpoint creates it again)
+    def purgeCkptDir(): Unit =
+      ckptDir.foreach(d => SharedBuild.deleteTree(java.nio.file.Paths.get(d)))
     // Host load varies wildly between runs of identical code (observed
     // 34s vs 85s an hour apart), so each query is timed in TWO passes
     // and the min reported — scheduler noise shrinks, real work doesn't.
@@ -158,11 +156,7 @@ object Bench {
       require(unknown.isEmpty,
         s"SPARK_GRAFT_ONLY names unknown queries: ${unknown.toSeq.sorted.mkString(",")}")
     }
-    // (ok, seconds, shared-build seconds paid inside this query's timed
-    // region) per query per pass — the third component decomposes
-    // first-payer rows (VERDICT r19 item 3) without changing what
-    // `queries` reports (total wall time, as every prior round).
-    val times = Array.fill(passes)(Map.empty[String, (Boolean, Double, Double)])
+    val times = Array.fill(passes)(Map.empty[String, Run])
     for (p <- 0 until passes) {
       // Each pass gets a FRESH SparkSession (r11's 8 phantom drift flags
       // all hit tail queries of the one long 294-query JVM — accumulated
@@ -175,40 +169,28 @@ object Bench {
       // honest accounting (exactly one query per pass carries the build).
       val spark = freshSession()
       times(p) = names.map { case (name, fn) =>
-        val b0 = SingleFlight.buildSecondsTotal
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true } catch {
-          case e: Throwable =>
-            if (!failed.contains(name)) failed ::= name
-            // Spark's stage-failure message carries the ROOT cause on a
-            // later line ("Lost task ...: SparkOutOfMemoryError: ...") —
-            // keep the first few lines, collapsed, so the artifact is
-            // self-explaining without the full log
-            val msg = Option(e.getMessage).getOrElse("")
-              .linesIterator.take(4).mkString(" ")
-              .replaceAll("\\s+", " ").take(280)
-            failReason += name -> s"${e.getClass.getSimpleName}: $msg"
-            System.err.println(s"[bench] $name FAILED (pass ${p + 1}): ${e.getMessage}")
-            false
-        }
-        val sec = (System.nanoTime() - t0) / 1e9
-        val bsec = SingleFlight.buildSecondsTotal - b0
-        // untimed: bound cross-query cache growth and collect the dead
-        // shuffle/cache garbage NOW instead of mid-next-query
-        spark.catalog.clearCache()
-        System.gc()
-        name -> (ok, sec, bsec)
+        val r = timeRun(spark, sfDir, fn)
+        r.failure.foreach(why =>
+          System.err.println(s"[bench] $name FAILED (pass ${p + 1}): $why"))
+        name -> r
       }.toMap
       if (p < passes - 1) { spark.stop(); purgeCkptDir() }
     }
+    // per-query failure reason, the last pass's where several failed —
+    // VERDICT r14 item 7: the sf10 tier artifacts listed bare names
+    // under `errors` while also recording a time, so a failed artifact
+    // couldn't be read without guessing what broke
+    val failReason = times.toSeq.flatMap(_.collect {
+      case (n, Run(_, _, Some(why))) => n -> why }).toMap
+    val failed = failReason.keys.toList
     val results = names.map { case (name, _) =>
       val runs = (0 until passes).map(p => times(p)(name))
       // min over SUCCESSFUL passes only — a fast failure must not report
       // a bogus fast time; all-failed falls back to the max so the error
       // still costs, never flatters, the total
-      val good = runs.filter(_._1).map(r => (r._2, r._3))
-      name -> (if (good.nonEmpty) good.minBy(_._1)
-               else { val m = runs.maxBy(_._2); (m._2, m._3) })
+      val good = runs.filter(_.failure.isEmpty)
+      val pick = if (good.nonEmpty) good.minBy(_.sec) else runs.maxBy(_.sec)
+      name -> (pick.sec, pick.buildSec)
     }
     // per-query shared-build component, taken from the SAME pass whose
     // total the min selected (so total − build is that pass's query-only

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Prints the density-derived df cap of every capped index lane for a
@@ -21,14 +21,7 @@ import org.apache.spark.sql.functions._
 object CapsReport {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/tmp/sf1_dense")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
     import graft.operators.{Dedup, TextAnalysis}
 
     val docs = Tables.documents(spark, dir)

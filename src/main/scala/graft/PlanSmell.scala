@@ -1,12 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** r19 plan-smell survey: per registered query, operator counts that
   * flag structural cost (shuffle exchanges, nested-loop joins, single-
   * partition windows/sorts, parquet scans, codegen-opaque fallbacks) so
   * the optimization round ranks by plan shape instead of reading 308
-  * plans by hand.
+  * plans by hand. Runs in the plan-document session
+  * ([[GraftSession.forPlans]]), so its counts describe the plans
+  * PLANS.md and `PLAN_FINGERPRINTS.json` pin.
   *
   * Usage: runMain graft.PlanSmell <sfDir> [minScore]
   */
@@ -14,13 +14,7 @@ object PlanSmell {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val min = args.lift(1).map(_.toInt).getOrElse(0)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forPlans()
     println("query,exchanges,single_part,bnlj,smj,scans,windows,generates")
     Registry.all.sortBy(_.name).foreach { q =>
       try {

@@ -11,7 +11,14 @@ import org.apache.spark.sql.execution.ExplainMode
   * ("filters pushed to the scan", "partial aggregation before the
   * exchange", "broadcast for small sides", "no nested-loop range joins").
   *
-  * Usage: runMain graft.Plans [sfDir] [outFile]
+  * Usage:
+  *   runMain graft.Plans [sfDir] [outFile]       writes PLANS.md
+  *   runMain graft.Plans <sfDir> <formatted|simple> <query> [more ...]
+  *     prints the named registered queries' plans to stdout instead:
+  *     `formatted` as PLANS.md has them, `simple` as
+  *     `executedPlan.toString` (what PlanAuditSpec matches against).
+  *
+  * Both run in the plan-document session ([[GraftSession.forPlans]]).
   */
 object Plans {
 
@@ -706,14 +713,31 @@ object Plans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val outFile = args.lift(1).getOrElse("PLANS.md")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forPlans()
+    try args.lift(1) match {
+      case Some(m @ ("formatted" | "simple")) =>
+        printPlans(spark, sfDir, m, args.drop(2).toSeq)
+      case out => writePlans(spark, sfDir, out.getOrElse("PLANS.md"))
+    } finally spark.stop()
+  }
+
+  /** The query-filter mode: each named registered query's plan, to
+    * stdout, under a `==== name ====` line. */
+  private def printPlans(spark: SparkSession, sfDir: String, mode: String,
+      names: Seq[String]): Unit = {
+    require(names.nonEmpty, s"name at least one query to print in $mode form")
+    names.foreach { name =>
+      val q = Registry.all.find(_.name == name)
+        .getOrElse(sys.error(s"unknown query: $name"))
+      val qe = q.run(spark, sfDir).queryExecution
+      println(s"==== $name ====")
+      println(if (mode == "simple") qe.executedPlan.toString
+        else qe.explainString(ExplainMode.fromString(mode)))
+    }
+  }
+
+  private def writePlans(spark: SparkSession, sfDir: String,
+      outFile: String): Unit = {
     val mode = ExplainMode.fromString("formatted")
     val cores = lazyCores(spark, sfDir)
     val sections = picks.map { case (name, note) =>
@@ -793,6 +817,5 @@ object Plans {
     Files.write(Paths.get(outFile),
       (header + "\n" + body).getBytes(StandardCharsets.UTF_8))
     println(s"[plans] wrote ${picks.size} plans to $outFile")
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale sweep for the LLM-pipeline operators: replicate the sf0.1
@@ -55,19 +55,8 @@ object ScaleDemo {
     def keep(fns: Seq[(String, DataFrame => Long)]) =
       only.fold(fns)(sel => fns.filter(f => sel(f._1)))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    // untimed warmup so the first measured operator isn't charged JVM /
-    // codegen startup (same rationale as Bench)
-    spark.range(1000000L).selectExpr("sum(id)").collect()
-    operators.Dedup.exactDedup(Tables.documents(spark, sfDir)).count()
+    val spark = GraftSession.fromEnv()
+    Bench.warmUp(spark, sfDir)
 
     // materialize the replicated inputs once so operator timings measure
     // the operator, not the replication explode

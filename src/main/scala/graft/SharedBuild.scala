@@ -135,12 +135,13 @@ private[graft] object SharedBuild {
     tempDirs.remove(p)
     ()
   }
-  /** Best-effort tree delete. Catches NonFatal, not just IOException
-    * (ADVICE r15: iterating a Files.walk stream surfaces disk errors as
+  /** Best-effort tree delete, `p` included (also Bench's checkpoint-dir
+    * purge). Catches NonFatal, not just IOException (ADVICE r15:
+    * iterating a Files.walk stream surfaces disk errors as
     * UncheckedIOException, a RuntimeException — an exit path or live
     * query path must not throw on cleanup), and closes the walk stream
     * (it holds directory fds). */
-  private def deleteTree(p: Path): Unit =
+  private[graft] def deleteTree(p: Path): Unit =
     try {
       if (Files.exists(p)) {
         val walk = Files.walk(p)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -55,19 +55,11 @@ object StreamSoak {
   def main(args: Array[String]): Unit = {
     val secs = args.headOption.map(_.toInt).getOrElse(60)
     val rps = sys.env.getOrElse("SPARK_GRAFT_SOAK_RPS", "20000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // default retention is 100 progress objects; a >=300 s soak at 1 s
-      // triggers needs the full run retained so peak_state_rows is the
-      // TRUE peak, not the peak of the last 100 batches
-      .config("spark.sql.streaming.numRecentProgressUpdates", "1000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // default retention is 100 progress objects; a >=300 s soak at 1 s
+    // triggers needs the full run retained so peak_state_rows is the
+    // TRUE peak, not the peak of the last 100 batches
+    val spark = GraftSession.fromEnv(
+      "spark.sql.streaming.numRecentProgressUpdates" -> "1000")
 
     def rate(): DataFrame = spark.readStream.format("rate")
       .option("rowsPerSecond", rps.toString)
@@ -252,7 +244,7 @@ object StreamSoak {
       soakUpsert())
 
     val line = s"""{"metric":"streaming_soak","duration_s":$secs,""" +
-      s""""source_rows_per_sec":$rps,"cpus":$cpus,""" +
+      s""""source_rows_per_sec":$rps,"cpus":${GraftSession.cpus},""" +
       s""""pipelines":{${parts.mkString(",")}}}"""
     println(line)
     java.nio.file.Files.writeString(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Same-data-scale throughput comparison against the reference's headline
@@ -27,13 +26,7 @@ object ThroughputDemo {
   def main(args: Array[String]): Unit = {
     val targetMB = args.headOption.map(_.toInt).getOrElse(100)
     val targetVocab = args.lift(1).map(_.toLong).getOrElse(0L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.fromEnv()
 
     val base = Tables.documents(spark, "/root/testdata/sf0.1")
     val baseBytes = base.select(sum(octet_length(col("text")) + 1)).first().getLong(0)

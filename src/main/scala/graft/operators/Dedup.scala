@@ -265,7 +265,7 @@ object Dedup {
     * dup groups. `SPARK_GRAFT_BUCKET_DF_CAP` overrides the ceiling, read
     * once at class load and interpolated into BOTH the Spark plans and
     * every DuckDB oracle string from this same val — the two engines
-    * cannot desync. Like `SPARK_GRAFT_SHUFFLE_PARTITIONS`, the value is
+    * cannot desync. Like `GraftSession.shufflePartitions`, the value is
     * part of the recorded measurement context; re-baseline before gating
     * under a new one. */
   val DefaultBucketDfCap: Int =
@@ -859,16 +859,26 @@ object Dedup {
     * key) and a one-row doc count `nd` (`n_docs`): admit df levels
     * ascending while the cumulative uncapped pair mass
     * Σ n_keys(df)·df(df−1)/2 stays within `budgetPerDoc × n_docs`,
-    * clamp to [floorCap, ceilCap]. Identical arithmetic to
-    * [[recommendShingleDfCap]] (g26) — CapDerivationSpec pins the two
-    * equal — exposed separately so every capped index can apply it
-    * in-plan. The histogram is ≤ ceilCap rows, so the single-partition
-    * cumulative window and the 1-row joins are driver-trivial at any
-    * corpus size. */
+    * clamp to [floorCap, ceilCap]. The rule's in-plan form, built on
+    * [[budgetWindow]] as [[recommendShingleDfCap]] (g26) is, so every
+    * capped index can apply it in-plan; [[budgetRule]] is its driver
+    * form. CapDerivationSpec pins the three equal. */
   private[graft] def budgetCap(dfTab: DataFrame, nd: DataFrame,
       budgetPerDoc: Long = DefaultCapBudgetPerDoc,
       floorCap: Int = DefaultCapFloor,
       ceilCap: Int = DefaultShingleDfCap): DataFrame = {
+    val (_, rec0) = budgetWindow(dfTab, nd, budgetPerDoc, ceilCap)
+    rec0.select(clampCap(floorCap, ceilCap).as("cap"))
+  }
+
+  /** The in-plan half of the budget rule, shared by [[budgetCap]] and
+    * [[recommendShingleDfCap]]: the cumulative pair mass per admitted df
+    * level (`df`, `cum_pairs`; ≤ ceilCap rows, so the single-partition
+    * cumulative window is bounded by the cap ceiling, never by corpus
+    * size) and the largest df whose mass fits the budget (one row,
+    * `rec0`, null when none does). */
+  private def budgetWindow(dfTab: DataFrame, nd: DataFrame,
+      budgetPerDoc: Long, ceilCap: Int): (DataFrame, DataFrame) = {
     val hist = dfTab.where(col("df").between(2, ceilCap))
       .groupBy("df")
       .agg((count(lit(1)) * expr("df * (df - 1) div 2")).as("pairs"))
@@ -878,9 +888,13 @@ object Dedup {
     val rec0 = cum.crossJoin(broadcast(nd))
       .where(col("cum_pairs") <= col("n_docs") * budgetPerDoc)
       .agg(max(col("df")).as("rec0"))
-    rec0.select(greatest(lit(floorCap.toLong), least(lit(ceilCap.toLong),
-      coalesce(col("rec0"), lit(floorCap.toLong)))).as("cap"))
+    (cum, rec0)
   }
+
+  /** `rec0` clamped to [floorCap, ceilCap], floorCap when null. */
+  private def clampCap(floorCap: Int, ceilCap: Int): Column =
+    greatest(lit(floorCap.toLong), least(lit(ceilCap.toLong),
+      coalesce(col("rec0"), lit(floorCap.toLong))))
 
   /** [[budgetCap]]'s rule on the driver, over a df → key-count histogram
     * (levels outside [2, ceilCap] are ignored) and a document count: the
@@ -974,24 +988,12 @@ object Dedup {
       floorCap: Int = DefaultCapFloor,
       ceilCap: Int = DefaultShingleDfCap): DataFrame = {
     val dfTab = shingleSet.groupBy("sh_h").agg(count(lit(1)).as("df"))
-    val hist = dfTab.where(col("df").between(2, ceilCap))
-      .groupBy("df")
-      .agg((count(lit(1)) * expr("df * (df - 1) div 2")).as("pairs"))
-    // ≤ ceilCap rows: the single-partition cumulative window is bounded
-    // by the cap ceiling, never by corpus size
-    val cw = Window.orderBy("df")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cum = hist.select(col("df"), sum("pairs").over(cw).as("cum_pairs"))
     val nd = shingleSet.agg(countDistinct(col("doc_id")).as("n_docs"))
-    val rec0 = cum.crossJoin(broadcast(nd))
-      .where(col("cum_pairs") <= col("n_docs") * budgetPerDoc)
-      .agg(max(col("df")).as("rec0"))
+    val (cum, rec0) = budgetWindow(dfTab, nd, budgetPerDoc, ceilCap)
     val rec = nd.crossJoin(broadcast(rec0))
       .select(col("n_docs"),
         (col("n_docs") * budgetPerDoc).as("budget_pairs"),
-        greatest(lit(floorCap.toLong), least(lit(ceilCap.toLong),
-          coalesce(col("rec0"), lit(floorCap.toLong))))
-          .as("recommended_cap"))
+        clampCap(floorCap, ceilCap).as("recommended_cap"))
     // admitted_pairs reports the mass at the FINAL (clamped) cap — when
     // the floor overrides the budget rule, the over-budget cost of the
     // recall floor is visible in-result, not hidden

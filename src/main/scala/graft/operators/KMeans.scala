@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftColumns.fpDot
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -47,7 +48,7 @@ object KMeans {
     fixed.select(col("vec_id"), col("f").as("fa"), col("nrm").as("na"))
       .crossJoin(broadcast(cents))
       .select(col("vec_id"), col("fa"), col("centroid_id"),
-        expr(Similarity.cosExpr(fixed.sparkSession)).as("cos"))
+        Similarity.cosCol.as("cos"))
       .groupBy("vec_id")
       .agg(max_by(struct(col("centroid_id"), col("fa")),
         struct(col("cos"), (-col("centroid_id")).as("tie"))).as("pick"))
@@ -133,7 +134,6 @@ object KMeans {
     * inertia costs NOTHING beyond k1's plan: pick the argmax candidate,
     * sum its distance. Output is k rows. */
   def kmeansInertia(vecs: DataFrame, k: Int): DataFrame = {
-    val s = vecs.sparkSession
     val dec = DecimalType(38, 0)
     val fixed = Similarity.withFixed(vecs)
     val cents = fixed.orderBy("vec_id").limit(k)
@@ -142,9 +142,9 @@ object KMeans {
     fixed.select(col("vec_id"), col("f").as("fa"), col("nrm").as("na"))
       .crossJoin(broadcast(cents))
       .select(col("vec_id"), col("centroid_id"),
-        expr(Similarity.cosExpr(s)).as("cos"),
+        Similarity.cosCol.as("cos"),
         (col("na") + col("nb") -
-          lit(2L) * expr(Similarity.dotExpr(s, "fa", "fb"))).as("d2"))
+          lit(2L) * fpDot(col("fa"), col("fb"))).as("d2"))
       .groupBy("vec_id")
       .agg(max_by(struct(col("centroid_id"), col("d2")),
         struct(col("cos"), (-col("centroid_id")).as("tie"))).as("pick"))
@@ -181,7 +181,6 @@ object KMeans {
     * k-bounded (the audited a2/a4 class); the census is a combinable
     * |clusters|-row rollup. */
   def simplifiedSilhouette(vecs: DataFrame, k: Int): DataFrame = {
-    val s = vecs.sparkSession
     val fixed = Similarity.withFixed(vecs)
     val cents = fixed.orderBy("vec_id").limit(k)
       .select(col("vec_id").as("centroid_id"), col("f").as("fb"),
@@ -189,9 +188,9 @@ object KMeans {
     val scored = fixed.select(col("vec_id"), col("f").as("fa"), col("nrm").as("na"))
       .crossJoin(broadcast(cents))
       .select(col("vec_id"), col("centroid_id"),
-        expr(Similarity.cosExpr(s)).as("cos"),
+        Similarity.cosCol.as("cos"),
         (col("na") + col("nb") -
-          lit(2L) * expr(Similarity.dotExpr(s, "fa", "fb"))).as("d2"))
+          lit(2L) * fpDot(col("fa"), col("fb"))).as("d2"))
     val w = Window.partitionBy("vec_id")
       .orderBy(col("cos").desc, col("centroid_id").asc)
     scored.withColumn("rn", row_number().over(w))
@@ -232,10 +231,9 @@ object KMeans {
     * min-per-vector reduce, and a 1-row struct-max argmax — no window,
     * no collect, nothing corpus-sized on the driver. */
   def maximinSeeds(vecs: DataFrame, k: Int = 4): DataFrame = {
-    val s = vecs.sparkSession
     val fixed = Similarity.withFixed(vecs)
       .select(col("vec_id"), col("f"), col("nrm"))
-    val distExpr = s"na + nb - 2 * ${Similarity.dotExpr(s, "fa", "fb")}"
+    val dist = col("na") + col("nb") - lit(2L) * fpDot(col("fa"), col("fb"))
     // r19: the seed set is Materialize'd per round (the dedupClusters
     // iteration-frame discipline). The lazy chain re-evaluated every
     // prior round inside each new round's plan — round r's subtree held
@@ -257,7 +255,7 @@ object KMeans {
         .select(col("vec_id"), col("f").as("fa"), col("nrm").as("na"))
         .crossJoin(broadcast(
           seeds.select(col("f").as("fb"), col("nrm").as("nb"))))
-        .select(col("vec_id"), expr(distExpr).as("dist"))
+        .select(col("vec_id"), dist.as("dist"))
         .groupBy("vec_id").agg(min("dist").as("mind"))
         .join(broadcast(seeds.select("vec_id")), Seq("vec_id"), "left_anti")
       val pick = mind

@@ -85,5 +85,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("gopher_stats"),
       new ExpressionInfo(classOf[GopherStats].getName, "gopher_stats"),
       (children: Seq[Expression]) => GopherStats(children.head)))
+    ext.injectFunction((
+      new FunctionIdentifier("minhash_sig"),
+      new ExpressionInfo(classOf[MinhashSig].getName, "minhash_sig"),
+      (children: Seq[Expression]) => {
+        val bands = children(1)
+        require(bands.foldable && bands.dataType == IntegerType,
+          s"minhash_sig's band count must be a constant int, got ${bands.sql}")
+        MinhashSig(children.head, bands.eval().asInstanceOf[Int])
+      }))
   }
 }

@@ -40,8 +40,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Operators build it as a Column with
   * `org.apache.spark.sql.GraftColumns.minhashSig`, which works on any
-  * session (no SQL text calls it, so `GraftExtensions` does not
-  * register the name). Reader: `Dedup.minhashSignature`, and through it
+  * session; `GraftExtensions` registers the name for SQL text, with a
+  * constant band count. Reader: `Dedup.minhashSignature`, and through it
   * the `signatures` level of the dedup ladder.
   */
 case class MinhashSig(child: Expression, bands: Int) extends UnaryExpression {

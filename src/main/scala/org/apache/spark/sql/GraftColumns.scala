@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.classic.ExpressionUtils
 
-import _root_.graft.plans.{GopherStats, Md5Long56, MinhashSig}
+import _root_.graft.plans.{FixedDotProduct, GopherStats, Md5Long56, MinhashSig}
 
 /** Column factories for graft's native Catalyst expressions.
   *
@@ -15,6 +15,11 @@ import _root_.graft.plans.{GopherStats, Md5Long56, MinhashSig}
   */
 object GraftColumns {
   import ExpressionUtils.{column, expression}
+
+  /** `fp_dot(a, b)`, the exact long dot product of two fixed-point
+    * vectors: see [[FixedDotProduct]]. */
+  def fpDot(a: Column, b: Column): Column =
+    column(FixedDotProduct(expression(a), expression(b)))
 
   /** `gopher_stats(text)`: see [[GopherStats]]. */
   def gopherStats(text: Column): Column = column(GopherStats(expression(text)))

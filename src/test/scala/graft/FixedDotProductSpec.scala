@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, GraftColumns}
 import org.apache.spark.sql.functions._
 
 class FixedDotProductSpec extends SparkSpec {
@@ -41,12 +42,23 @@ class FixedDotProductSpec extends SparkSpec {
   }
 
   test("similarity results identical with and without the native expression") {
-    // dotExpr falls back to the HOF form when fp_dot is absent; both paths
-    // must produce byte-identical cosines (exact long arithmetic).
-    val vecs = Tables.embeddings(spark, sf("sf0.001"))
-    val native = operators.Similarity.cosineTopK(vecs, 3, 5)
-      .as[(Long, Long, Int, Double)].collect().toSet
-    assert(operators.Similarity.dotExpr(spark, "x", "y").startsWith("fp_dot"))
-    assert(native.nonEmpty)
+    // the HOF form is the reference: dot products and norms are exact
+    // longs, so every pair's cosine must be bit-identical
+    val f = Tables.embeddings(spark, sf("sf0.001")).where(col("vec_id") < 100)
+      .select(col("vec_id"), expr(operators.Similarity.fixedExpr).as("f"))
+    val pairs = f.select(col("f").as("fa"))
+      .crossJoin(f.select(col("f").as("fb")))
+    def cosine(dot: (String, String) => Column): Column =
+      dot("fa", "fb").cast("double") /
+        (sqrt(dot("fa", "fa").cast("double")) * sqrt(dot("fb", "fb").cast("double")))
+    val native = cosine((a, b) => GraftColumns.fpDot(col(a), col(b)))
+    val hof = cosine((a, b) =>
+      expr(s"aggregate(zip_with($a, $b, (x, y) -> x * y), 0L, (acc, x) -> acc + x)"))
+    assert(pairs.count() === 10000L)
+    assert(pairs.where(!(native <=> hof)).count() === 0L)
+  }
+
+  test("cosine and k-means queries give the same rows on a plain session") {
+    assertPlainSessionParity(sf("sf0.001"), Seq("s1_cosine_topk", "k3_inertia"))
   }
 }

@@ -89,7 +89,7 @@ object PlainSessionQueries {
       .getOrCreate()
     try {
       require(!spark.sparkContext.getConf.contains("spark.sql.extensions"))
-      Seq("gopher_stats", "md5_long56").foreach { f =>
+      Seq("fp_dot", "gopher_stats", "md5_long56").foreach { f =>
         require(!spark.catalog.functionExists(f), s"GraftExtensions loaded: $f")
       }
       args.drop(2).foreach { name =>
@@ -101,17 +101,8 @@ object PlainSessionQueries {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  /** The plan-document session, with a temp warehouse dir. */
+  lazy val session: SparkSession = GraftSession.forPlans(
+    "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft_wh").toString)
 }
